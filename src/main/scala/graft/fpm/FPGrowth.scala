@@ -18,7 +18,7 @@ import scala.collection.mutable
  * first opportunity — every relational stage here stays in DataFrame land
  * so Catalyst supplies column pruning / predicate pushdown / partial
  * aggregation; only the per-group tree mining itself is typed
- * (`groupByKey(...).flatMapGroups`), which is genuinely imperative.
+ * (`repartitionById(...).mapPartitions`), which is genuinely imperative.
  *
  * Pipeline:
  *  1. L1 pass: `explode -> groupBy(item).count -> HAVING count >= minCount`
@@ -29,7 +29,8 @@ import scala.collection.mutable
  *     most one (groupId, rank-prefix) per distinct group — the PFP shuffle
  *     dedup trick (`pfp/FPGrowthCore.scala:121-140`). Shuffled as packed
  *     Int arrays (Tungsten), far cheaper than serialized tree graphs.
- *  4. Per-group [[FPTree]] build + extract with owner-validated suffixes
+ *  4. Shuffle on the group id as the partition id, then per-group
+ *     [[FPTree]] build + extract with owner-validated suffixes
  *     (exactly-once global emission, no distinct needed downstream).
  *
  * Scale notes (100 TB design): the only data-sized shuffle is step 3,
@@ -37,9 +38,11 @@ import scala.collection.mutable
  * ints — mitigated by the prefix dedup and by dictionary rank encoding
  * (strings never shuffle). Skew across groups is the classic PFP failure
  * mode; `balanced = true` (default, = EPFP) packs item ranks into groups
- * by estimated mining cost via LPT. Group count is decoupled from
- * `spark.sql.shuffle.partitions`. Driver state is only the frequent-item
- * dictionary, which minSupport bounds.
+ * by estimated mining cost via LPT. The group count is the mining task
+ * count: group g is mined by task g, whatever
+ * `spark.sql.shuffle.partitions` is, so the LPT packing is the task
+ * packing. Driver state is only the frequent-item dictionary, which
+ * minSupport bounds.
  */
 class FPGrowth private (
     private var itemsCol: String,
@@ -78,8 +81,9 @@ class FPGrowth private (
   /**
    * true = mine via the [[FPPatternsAgg]] Catalyst aggregate (map-side
    * partial FP-trees, shuffled as serialized path-multisets — wins with
-   * dense prefix sharing); false (default) = typed flatMapGroups (raw
-   * cond-transactions shuffle — wins when prefixes rarely repeat).
+   * dense prefix sharing); false (default) = one typed mining task per
+   * group (raw cond-transactions shuffle — wins when prefixes rarely
+   * repeat).
    * Results are identical (spec-enforced).
    */
   def setTreeAggregation(v: Boolean): this.type = { treeAggregation = v; this }
@@ -144,15 +148,24 @@ class FPGrowth private (
           }
           .toDF("items", "freq")
       } else {
+        // Group ids are 0 until numParts, so the id IS the partition id:
+        // group g is mined by task g and the LPT packing reaches the
+        // executors (a hash shuffle on the id collides groups onto shared
+        // partitions). One tree per group id keeps results exact even if
+        // a partition ever holds several groups.
         condTxns
-          .groupByKey(_._1)
-          .flatMapGroups { (gid, it) =>
-            val tree = new FPTree
-            it.foreach { case (_, txn) => tree.add(txn) }
+          .repartitionById(numParts, col("_1"))
+          .mapPartitions { it =>
+            val trees = mutable.LongMap.empty[FPTree]
+            it.foreach { case (gid, txn) =>
+              trees.getOrElseUpdate(gid.toLong, new FPTree).add(txn)
+            }
             val group = bcGroup.value
             val dict = bcItems.value
-            tree.extract(mc, r => group(r) == gid).map { case (ranks, cnt) =>
-              (ranks.map(dict), cnt)
+            trees.iterator.flatMap { case (gid, tree) =>
+              tree.extract(mc, r => group(r) == gid).map { case (ranks, cnt) =>
+                (ranks.map(dict), cnt)
+              }
             }
           }
           .toDF("items", "freq")

@@ -20,7 +20,7 @@ final class FPTreeBuffer(var tree: FPTree, var gid: Int)
  *
  *   condTxns.groupBy($"gid").agg(fp_patterns($"gid", $"ranks", ...))
  *
- * Unlike the `flatMapGroups` path, this gets Catalyst's partial
+ * Unlike the per-group `mapPartitions` path, this gets Catalyst's partial
  * aggregation: map-side partial FP-trees are built per partition and
  * shuffled as compact serialized path-multisets (the MLlib
  * `aggregateByKey` shape), which wins when transactions share prefixes

@@ -12,10 +12,11 @@ package graft.fpm
  * all r higher-frequency items.
  *
  * We reproduce both as a precomputed rank->group array — in DataFrame land
- * there is no user `Partitioner`; the group id becomes a grouping column
- * and Spark shuffles on it. This decouples #groups from
- * `spark.sql.shuffle.partitions`, which is what you want at scale: groups
- * are the skew unit, shuffle partitions the parallelism unit.
+ * there is no user `Partitioner`; [[FPGrowth]] shuffles with the group id
+ * as the partition id (`repartitionById`), so the group count is the
+ * mining task count and group g is mined by task g. A hash shuffle on the
+ * id would undo the packing: Murmur3 collides groups onto shared
+ * partitions and leaves others empty.
  */
 object ItemGroups {
 

@@ -85,13 +85,29 @@ object Predictor {
           }
         }
       } else {
-        val bcRules = data.sparkSession.sparkContext.broadcast(rules)
+        // Each rule is filed under its first antecedent item (empty
+        // antecedents apart): a rule whose first item is not in the row
+        // cannot fire, so a row tests only the rules filed under its own
+        // items. Visiting those in ascending rule index keeps the scan's
+        // lift order, so the output equals a scan of the whole table.
+        val (conditional, unconditional) = rules.indices.partition(r => rules(r)._1.nonEmpty)
+        val byFirstItem: Map[String, Array[Int]] =
+          conditional.groupBy(r => rules(r)._1.head).map { case (it, rs) => it -> rs.toArray }
+        val bc = data.sparkSession.sparkContext
+          .broadcast((rules, byFirstItem, unconditional.toArray))
         udf { items: Seq[String] =>
           if (items == null) null
           else {
+            val (rs, byItem, always) = bc.value
             val itemset = items.toSet
+            val candidates = mutable.ArrayBuilder.make[Int]
+            candidates ++= always
+            itemset.foreach(it => byItem.get(it).foreach(candidates ++= _))
+            val order = candidates.result()
+            java.util.Arrays.sort(order)
             val picked = mutable.LinkedHashSet.empty[String]
-            bcRules.value.foreach { case (ant, cons, _) =>
+            order.foreach { r =>
+              val (ant, cons, _) = rs(r)
               if (!itemset.contains(cons) && ant.forall(itemset.contains)) picked += cons
             }
             picked.mkString(", ")

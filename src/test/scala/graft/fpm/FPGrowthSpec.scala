@@ -1,6 +1,7 @@
 package graft.fpm
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.spark_partition_id
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -54,10 +55,39 @@ class FPGrowthSpec extends AnyFunSuite {
       .setMinSupport(0.05).setItemsCol("items").fit(df)
     val expected = mllib.freqItemsets
       .as[(Seq[String], Long)].collect().map { case (i, f) => i.toSet -> f }.toMap
-    for (balanced <- Seq(true, false); parts <- Seq(1, 3, 7)) {
-      val got = itemsetsOf(new FPGrowth()
-        .setMinSupport(0.05).setBalanced(balanced).setNumPartitions(parts).fit(df))
-      assert(got == expected, s"balanced=$balanced parts=$parts")
+    // 4 and 32 are counts where a hash of the group id collides groups
+    try {
+      for (aqe <- Seq(true, false); balanced <- Seq(true, false);
+           parts <- Seq(1, 3, 4, 7, 32)) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val got = itemsetsOf(new FPGrowth()
+          .setMinSupport(0.05).setBalanced(balanced).setNumPartitions(parts).fit(df))
+        assert(got == expected, s"aqe=$aqe balanced=$balanced parts=$parts")
+      }
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
+
+  test("balanced groups: every non-empty group is mined in its own task") {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val items = (0 until 60).map(i => f"g$i%02d")
+    val df = Seq.fill(600)(rng.shuffle(items).take(2 + rng.nextInt(8))).toDF("items")
+    for (parts <- Seq(4, 32)) {
+      val model = new FPGrowth().setMinSupport(0.01).setNumPartitions(parts).fit(df)
+      val rows = model.freqItemsets
+        .select($"items", $"freq", spark_partition_id().as("task"))
+        .as[(Seq[String], Long, Int)].collect()
+      // rank order = (freq desc, item asc) over the frequent singletons;
+      // an itemset belongs to the group of its last-ranked item
+      val rankOf = rows.filter(_._1.size == 1).map(r => (r._1.head, r._2))
+        .sortBy { case (it, f) => (-f, it) }.map(_._1).zipWithIndex.toMap
+      val groupOf = ItemGroups.balanced(parts, rankOf.size)
+      val tasksOfGroup = rows.groupBy(r => groupOf(r._1.map(rankOf).max))
+        .map { case (g, rs) => g -> rs.map(_._3).distinct.toSeq }
+      assert(tasksOfGroup.size == parts, s"parts=$parts: ${tasksOfGroup.size} groups mined")
+      assert(tasksOfGroup.values.forall(_.length == 1), s"parts=$parts: a group split")
+      assert(tasksOfGroup.values.map(_.head).toSet.size == parts,
+        s"parts=$parts: groups share a task: $tasksOfGroup")
     }
   }
 

@@ -82,6 +82,57 @@ class PredictorSpec extends AnyFunSuite {
     assert(viaUdf.values.exists(_.nonEmpty))
   }
 
+  /** Reference for [[Predictor.predict]]: every rule tested on every row, in
+    * (pre-sorted) rule order, first occurrence of each consequent kept. */
+  private def linearScan(
+      items: Seq[String], rules: Array[(Array[String], String, Double)]): String =
+    if (items == null) null
+    else {
+      val set = items.toSet
+      rules.collect { case (ant, cons, _) if !set(cons) && ant.forall(set) => cons }
+        .distinct.mkString(", ")
+    }
+
+  test("generic path (>64-item rule vocab) == linear-scan reference on random rules") {
+    import spark.implicits._
+    for (seed <- Seq(3, 17, 41)) {
+      val rng = new scala.util.Random(seed)
+      val vocab = (0 until 100).map(i => f"v$i%03d")
+      val outside = (0 until 10).map(i => s"x$i") // in no rule
+      def draw(n: Int) = rng.shuffle(vocab).take(n)
+      val random = Array.fill(400) {
+        val ant = draw(rng.nextInt(4)).toArray
+        val cons = rng.shuffle(vocab.filterNot(ant.contains)).head
+        (ant, cons, rng.nextInt(12) / 4.0) // coarse lifts: ties on purpose
+      }
+      val rules = random ++ Array(
+        (Array.empty[String], "v000", 1.5), // fires on every row without v000
+        (Array("v001"), "v002", 9.0),       // one consequent at three lifts
+        (Array("v003", "v004"), "v002", 4.0),
+        (Array("v005"), "v002", 0.5)) ++
+        vocab.init.map(v => (Array(v), "v099", 0.25)) // every item in the vocab
+      val sorted = Predictor.sortRules(rules)
+      val baskets: Seq[(Long, Option[Seq[String]])] = (0 until 300).map { b =>
+        val row = b % 10 match {
+          case 0 => None
+          case 1 => Some(Seq.empty[String])
+          case 2 => Some(rng.shuffle(outside).take(1 + rng.nextInt(3)))
+          case _ => Some(rng.shuffle(draw(1 + rng.nextInt(12)) ++
+            outside.take(rng.nextInt(2))))
+        }
+        (b.toLong, row)
+      }
+      val got = Predictor.predict(
+          baskets.toDF("l_orderkey", "items"), sorted, "items", "prediction")
+        .select($"l_orderkey", $"prediction").as[(Long, String)].collect().toMap
+      val expected = baskets.map { case (k, row) =>
+        k -> linearScan(row.orNull, sorted)
+      }.toMap
+      assert(got == expected, s"seed=$seed")
+      assert(expected.values.count(p => p != null && p.contains(",")) > 10)
+    }
+  }
+
   test("null baskets predict null in BOTH paths; empty baskets predict empty string") {
     import spark.implicits._
     val rules = Array((Array("a"), "b", 2.0))
