@@ -29,8 +29,8 @@ final class BestLiftBuffer(val lifts: Array[Double])
  * actually COMBINES: the shuffle carries one `|vocab|`-double buffer per
  * group instead of every fired pair (collect_list partials concatenate,
  * so they reduce nothing). The consequent vocabulary is bounded driver
- * metadata (it rides the expression like [[FPPatternsAgg]]'s group
- * table), pre-sorted in UTF8 binary order so the eval tie-break is
+ * metadata (it rides inside the expression, serialized with the plan),
+ * pre-sorted in UTF8 binary order so the eval tie-break is
  * identical to the sort_array formulation this replaces (spec-pinned
  * byte-equal to the UDF path).
  */

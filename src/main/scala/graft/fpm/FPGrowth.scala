@@ -49,10 +49,9 @@ class FPGrowth private (
     private var minSupport: Double,
     private var minConfidence: Double,
     private var numPartitions: Int,
-    private var balanced: Boolean,
-    private var treeAggregation: Boolean) extends Serializable {
+    private var balanced: Boolean) extends Serializable {
 
-  def this() = this("items", 0.3, 0.8, -1, true, false)
+  def this() = this("items", 0.3, 0.8, -1, true)
 
   def setItemsCol(v: String): this.type = { itemsCol = v; this }
   def setMinSupport(v: Double): this.type = {
@@ -78,16 +77,6 @@ class FPGrowth private (
   /** true = EPFP balanced groups (default); false = PFP hash groups. */
   def setBalanced(v: Boolean): this.type = { balanced = v; this }
 
-  /**
-   * true = mine via the [[FPPatternsAgg]] Catalyst aggregate (map-side
-   * partial FP-trees, shuffled as serialized path-multisets — wins with
-   * dense prefix sharing); false (default) = one typed mining task per
-   * group (raw cond-transactions shuffle — wins when prefixes rarely
-   * repeat).
-   * Results are identical (spec-enforced).
-   */
-  def setTreeAggregation(v: Boolean): this.type = { treeAggregation = v; this }
-
   def fit(dataset: Dataset[_]): FPGrowthModel = {
     val spark = dataset.sparkSession
     import spark.implicits._
@@ -97,88 +86,63 @@ class FPGrowth private (
     // the input is scanned twice (L1 + cond-transactions).
     val handlePersistence = input.storageLevel == StorageLevel.NONE
     if (handlePersistence) input.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val numTransactions = input.count()
+      val minCount =
+        if (minCountOverride >= 1L) minCountOverride
+        else math.max(1L, math.ceil(minSupport * numTransactions).toLong)
 
-    val numTransactions = input.count()
-    val minCount =
-      if (minCountOverride >= 1L) minCountOverride
-      else math.max(1L, math.ceil(minSupport * numTransactions).toLong)
+      // L1: ranked frequent items. Deterministic rank order (freq desc, item asc).
+      val freqItems: Array[(String, Long)] = input
+        .select(explode(col(itemsCol)).as("item"))
+        .groupBy($"item").agg(count(lit(1)).as("freq"))
+        .where($"freq" >= minCount)
+        .orderBy($"freq".desc, $"item".asc)
+        .as[(String, Long)]
+        .collect()
 
-    // L1: ranked frequent items. Deterministic rank order (freq desc, item asc).
-    val freqItems: Array[(String, Long)] = input
-      .select(explode(col(itemsCol)).as("item"))
-      .groupBy($"item").agg(count(lit(1)).as("freq"))
-      .where($"freq" >= minCount)
-      .orderBy($"freq".desc, $"item".asc)
-      .as[(String, Long)]
-      .collect()
+      val numParts =
+        if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
+      val rankOf: Map[String, Int] = freqItems.iterator.map(_._1).zipWithIndex.toMap
+      val groupOf: Array[Int] =
+        if (balanced) ItemGroups.balanced(numParts, freqItems.length)
+        else ItemGroups.hashed(numParts, freqItems.length)
 
-    val numParts =
-      if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-    val rankOf: Map[String, Int] = freqItems.iterator.map(_._1).zipWithIndex.toMap
-    val groupOf: Array[Int] =
-      if (balanced) ItemGroups.balanced(numParts, freqItems.length)
-      else ItemGroups.hashed(numParts, freqItems.length)
+      val sc = spark.sparkContext
+      val bcRank = sc.broadcast(rankOf)
+      val bcGroup = sc.broadcast(groupOf)
+      val bcItems = sc.broadcast(freqItems.map(_._1))
 
-    val sc = spark.sparkContext
-    val bcRank = sc.broadcast(rankOf)
-    val bcGroup = sc.broadcast(groupOf)
-    val bcItems = sc.broadcast(freqItems.map(_._1))
+      // Group ids are 0 until numParts, so the id IS the partition id:
+      // group g is mined by task g and the LPT packing reaches the
+      // executors (a hash shuffle on the id collides groups onto shared
+      // partitions).
+      val freqItemsets: DataFrame = input
+        .as[Seq[String]]
+        .mapPartitions { it =>
+          val rank = bcRank.value
+          val group = bcGroup.value
+          it.flatMap(txn => FPGrowth.condTransactions(txn, rank, group))
+        }
+        .repartitionById(numParts, col("_1"))
+        .mapPartitions { it =>
+          val dict = bcItems.value
+          FPGrowth.mineGroups(it, bcGroup.value, minCount)
+            .map { case (ranks, cnt) => (ranks.map(dict), cnt) }
+        }
+        .toDF("items", "freq")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try freqItemsets.count() // materialize before releasing the input
+      catch { case e: Throwable => freqItemsets.unpersist(); throw e }
 
-    val condTxns: Dataset[(Int, Array[Int])] = input
-      .as[Seq[String]]
-      .mapPartitions { it =>
-        val rank = bcRank.value
-        val group = bcGroup.value
-        it.flatMap(txn => FPGrowth.condTransactions(txn, rank, group))
-      }
+      val itemSupport: Map[String, Double] =
+        freqItems.iterator.map { case (i, c) => i -> c.toDouble / numTransactions }.toMap
 
-    val mc = minCount
-    val minedDF: DataFrame =
-      if (treeAggregation) {
-        condTxns.toDF("gid", "ranks")
-          .groupBy(col("gid"))
-          .agg(FPTreeAggregate.fp_patterns(col("gid"), col("ranks"), mc, groupOf)
-            .as("patterns"))
-          .select(explode(col("patterns")).as("p"))
-          .select(col("p.ranks").as("ranks"), col("p.freq").as("freq"))
-          .as[(Seq[Int], Long)]
-          .map { case (ranks, cnt) =>
-            val dict = bcItems.value
-            (ranks.map(dict).toArray, cnt)
-          }
-          .toDF("items", "freq")
-      } else {
-        // Group ids are 0 until numParts, so the id IS the partition id:
-        // group g is mined by task g and the LPT packing reaches the
-        // executors (a hash shuffle on the id collides groups onto shared
-        // partitions). One tree per group id keeps results exact even if
-        // a partition ever holds several groups.
-        condTxns
-          .repartitionById(numParts, col("_1"))
-          .mapPartitions { it =>
-            val trees = mutable.LongMap.empty[FPTree]
-            it.foreach { case (gid, txn) =>
-              trees.getOrElseUpdate(gid.toLong, new FPTree).add(txn)
-            }
-            val group = bcGroup.value
-            val dict = bcItems.value
-            trees.iterator.flatMap { case (gid, tree) =>
-              tree.extract(mc, r => group(r) == gid).map { case (ranks, cnt) =>
-                (ranks.map(dict), cnt)
-              }
-            }
-          }
-          .toDF("items", "freq")
-      }
-    val freqItemsets: DataFrame = minedDF.persist(StorageLevel.MEMORY_AND_DISK)
-    freqItemsets.count() // materialize before releasing the input
-    if (handlePersistence) input.unpersist()
-
-    val itemSupport: Map[String, Double] =
-      freqItems.iterator.map { case (i, c) => i -> c.toDouble / numTransactions }.toMap
-
-    new FPGrowthModel(freqItemsets, itemSupport, numTransactions,
-      itemsCol, "prediction", minConfidence)
+      new FPGrowthModel(freqItemsets, itemSupport, numTransactions,
+        itemsCol, "prediction", minConfidence)
+    } finally {
+      if (handlePersistence) input.unpersist()
+    }
   }
 }
 
@@ -196,15 +160,15 @@ object FPGrowth {
    * (`pfp/FPGrowthCore.scala:75-80`): duplicate items in a transaction
    * are an error.
    */
-  private[graft] def condTransactions(
-      txn: Seq[String],
-      rankOf: Map[String, Int],
+  private[graft] def condTransactions[Item](
+      txn: collection.Seq[Item],
+      rankOf: Map[Item, Int],
       groupOf: Array[Int]): Iterator[(Int, Array[Int])] = {
     // The uniqueness invariant holds on the RAW transaction — matching the
     // reference, which validates before the frequency filter, so a
     // duplicate of an INFREQUENT item (["a","a","z"] with "a" rare) is
     // still an error rather than silently passing.
-    val seenItems = new java.util.HashSet[String](math.max(8, txn.size * 2))
+    val seenItems = new java.util.HashSet[Item](math.max(8, txn.size * 2))
     txn.foreach { item =>
       if (!seenItems.add(item)) {
         throw new IllegalArgumentException(
@@ -227,6 +191,27 @@ object FPGrowth {
         j -= 1
       }
       out.iterator
+    }
+  }
+
+  /**
+   * The PFP mining kernel for one partition of shuffled
+   * [[condTransactions]]: builds one [[FPTree]] per group id and extracts
+   * its frequent patterns (ascending-rank arrays) with the owner gate
+   * `groupOf(suffix) == gid`, so every pattern is emitted by exactly one
+   * group. Keyed by group id, the result stays exact even when a partition
+   * holds several groups.
+   */
+  private[graft] def mineGroups(
+      it: Iterator[(Int, Array[Int])],
+      groupOf: Array[Int],
+      minCount: Long): Iterator[(Array[Int], Long)] = {
+    val trees = mutable.LongMap.empty[FPTree]
+    it.foreach { case (gid, txn) =>
+      trees.getOrElseUpdate(gid.toLong, new FPTree).add(txn)
+    }
+    trees.iterator.flatMap { case (gid, tree) =>
+      tree.extract(minCount, r => groupOf(r) == gid)
     }
   }
 }

@@ -3,7 +3,6 @@ package graft.fpm
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 
-import scala.collection.mutable
 import scala.reflect.ClassTag
 
 /** `items, freq` — mirrors `pfp/FPGrowthCore.scala:153-154`. */
@@ -32,21 +31,21 @@ case class Rule[Item](
  *
  * The DataFrame path ([[FPGrowth]]) is the engine; this shim exists so a
  * user of the reference's programmatic core can switch without rewriting
- * call sites, including non-String item types. Same mining machinery
- * ([[FPTree]], [[ItemGroups]]), same exactly-once ownership rule.
+ * call sites, including non-String item types. Only the L1 pass is its
+ * own; it mines through the engine's kernel ([[FPGrowth.condTransactions]],
+ * [[FPGrowth.mineGroups]]) over balanced (EPFP) groups, one group per
+ * task. A transaction with duplicate items fails the mining job.
  */
 class FPGrowthCore[Item: ClassTag] private (
     private var minSupport: Double,
-    private var numPartitions: Int,
-    private var balanced: Boolean) extends Serializable {
+    private var numPartitions: Int) extends Serializable {
 
-  def this() = this(0.3, -1, true)
+  def this() = this(0.3, -1)
 
   def setMinSupport(v: Double): this.type = {
     require(v >= 0.0 && v <= 1.0); minSupport = v; this
   }
   def setNumPartitions(v: Int): this.type = { numPartitions = v; this }
-  def setBalanced(v: Boolean): this.type = { balanced = v; this }
 
   /** (frequent itemsets, item -> support fraction, #transactions). */
   def run(data: RDD[Array[Item]]): (RDD[FreqItemset[Item]], Map[Item, Double], Long) = {
@@ -56,14 +55,7 @@ class FPGrowthCore[Item: ClassTag] private (
     val numParts = if (numPartitions > 0) numPartitions else data.partitions.length
 
     val freqItems: Array[(Item, Long)] = data
-      .flatMap { t =>
-        val uniq = t.distinct
-        if (uniq.length != t.length) {
-          throw new IllegalArgumentException(
-            s"Items in a transaction must be unique but got ${t.mkString("[", ",", "]")}")
-        }
-        uniq.iterator.map(i => (i, 1L))
-      }
+      .flatMap(_.iterator.map(i => (i, 1L)))
       .reduceByKey(new HashPartitioner(numParts), _ + _)
       .filter(_._2 >= minCount)
       .collect()
@@ -72,41 +64,23 @@ class FPGrowthCore[Item: ClassTag] private (
     val itemSupport = freqItems.iterator
       .map { case (i, c) => i -> c.toDouble / count }.toMap
     val rankOf: Map[Item, Int] = freqItems.iterator.map(_._1).zipWithIndex.toMap
-    val groupOf =
-      if (balanced) ItemGroups.balanced(numParts, freqItems.length)
-      else ItemGroups.hashed(numParts, freqItems.length)
     val bcRank = sc.broadcast(rankOf)
-    val bcGroup = sc.broadcast(groupOf)
+    val bcGroup = sc.broadcast(ItemGroups.balanced(numParts, freqItems.length))
     val bcItems = sc.broadcast(freqItems.map(_._1))
 
+    // Group ids are 0 until numParts and HashPartitioner maps such an Int
+    // to itself, so group g is mined by partition g.
     val itemsets = data
-      .flatMap { txn =>
+      .mapPartitions { it =>
         val rank = bcRank.value
-        val ranks = txn.iterator.flatMap(rank.get).toArray
-        java.util.Arrays.sort(ranks)
         val group = bcGroup.value
-        val seen = mutable.BitSet.empty
-        val out = mutable.ArrayBuffer.empty[(Int, Array[Int])]
-        var j = ranks.length - 1
-        while (j >= 0) {
-          val g = group(ranks(j))
-          if (!seen.contains(g)) {
-            seen += g
-            out += ((g, java.util.Arrays.copyOfRange(ranks, 0, j + 1)))
-          }
-          j -= 1
-        }
-        out
+        it.flatMap(txn => FPGrowth.condTransactions(txn, rank, group))
       }
-      .groupByKey(new HashPartitioner(numParts))
-      .flatMap { case (gid, txns) =>
-        val tree = new FPTree
-        txns.foreach(tree.add(_))
-        val group = bcGroup.value
+      .partitionBy(new HashPartitioner(numParts))
+      .mapPartitions { it =>
         val dict = bcItems.value
-        tree.extract(minCount, r => group(r) == gid).map { case (ranks, f) =>
-          FreqItemset(ranks.map(dict), f)
-        }
+        FPGrowth.mineGroups(it, bcGroup.value, minCount)
+          .map { case (ranks, f) => FreqItemset(ranks.map(dict), f) }
       }
     (itemsets, itemSupport, count)
   }

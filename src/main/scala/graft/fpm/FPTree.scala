@@ -79,38 +79,6 @@ final class FPTree extends Serializable {
     this
   }
 
-  /** Merge another tree into this one by replaying its root-to-node paths. */
-  def merge(other: FPTree): this.type = {
-    other.paths.foreach { case (txn, c) => add(txn, c) }
-    this
-  }
-
-  /**
-   * Reconstruct the weighted path multiset: one (path, count) per node whose
-   * count exceeds the sum of its children (i.e., transactions ending there).
-   */
-  def paths: Iterator[(Array[Int], Long)] = {
-    val childSum = new Array[Long](size)
-    var i = 1
-    while (i < size) { childSum(parentOf(i)) += countOf(i); i += 1 }
-    (1 until size).iterator.flatMap { idx =>
-      val terminal = countOf(idx) - childSum(idx)
-      if (terminal > 0) Iterator.single((pathTo(idx), terminal)) else Iterator.empty
-    }
-  }
-
-  /** Items on the root path ending at `idx`, ascending rank, including idx's item. */
-  private def pathTo(idx: Int): Array[Int] = {
-    var n = 0
-    var cur = idx
-    while (cur != 0) { n += 1; cur = parentOf(cur) }
-    val out = new Array[Int](n)
-    cur = idx
-    var j = n - 1
-    while (cur != 0) { out(j) = itemOf(cur); j -= 1; cur = parentOf(cur) }
-    out
-  }
-
   /**
    * Mine all frequent patterns with support >= minCount.
    *

@@ -77,6 +77,46 @@ class AprioriSpec extends AnyFunSuite {
     }
   }
 
+  test("FPGrowthCore == FPGrowth on random baskets at 1, 3, 4, 7 partitions") {
+    import spark.implicits._
+    val rng = new scala.util.Random(31)
+    val items = (0 until 14).map(i => s"r$i")
+    val txns = Seq.fill(300)(rng.shuffle(items).take(1 + rng.nextInt(6)))
+    val engine = new FPGrowth().setMinSupport(0.04).fit(txns.toDF("items"))
+    val expected = setsOf(engine.freqItemsets)
+    val rdd = spark.sparkContext.parallelize(txns.map(_.toArray), 3)
+    for (parts <- Seq(1, 3, 4, 7)) {
+      val (itemsets, itemSupport, n) =
+        new FPGrowthCore[String]().setMinSupport(0.04).setNumPartitions(parts).run(rdd)
+      val got = itemsets.collect().map(fi => fi.items.toSet -> fi.freq).toMap
+      assert(got == expected, s"parts=$parts")
+      assert(n == txns.size)
+      assert(itemSupport == engine.itemSupport, s"parts=$parts")
+    }
+  }
+
+  test("FPGrowthCore over Int items == the String engine on the same baskets") {
+    import spark.implicits._
+    val rng = new scala.util.Random(59)
+    val txns = Seq.fill(250)(rng.shuffle((0 until 11).toList).take(1 + rng.nextInt(5)))
+    val rdd = spark.sparkContext.parallelize(txns.map(_.toArray), 2)
+    val (itemsets, _, _) =
+      new FPGrowthCore[Int]().setMinSupport(0.05).setNumPartitions(4).run(rdd)
+    val got = itemsets.collect().map(fi => fi.items.map(_.toString).toSet -> fi.freq).toMap
+    val expected = setsOf(new FPGrowth().setMinSupport(0.05)
+      .fit(txns.map(_.map(_.toString)).toDF("items")).freqItemsets)
+    assert(got.nonEmpty)
+    assert(got == expected)
+  }
+
+  test("FPGrowthCore rejects a transaction with duplicate items") {
+    val rdd = spark.sparkContext.parallelize(Seq(Array("a", "b"), Array("a", "a", "b")), 2)
+    val ex = intercept[Exception] {
+      new FPGrowthCore[String]().setMinSupport(0.1).setNumPartitions(2).run(rdd)._1.collect()
+    }
+    assert(ex.getMessage.contains("must be unique"))
+  }
+
   test("text ingestion dedupes tokens per line") {
     import spark.implicits._
     val df = TextTransactions.fromLines(spark, Seq("a b a c", "d d"))

@@ -2,6 +2,7 @@ package graft.fpm
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -91,22 +92,6 @@ class FPGrowthSpec extends AnyFunSuite {
     }
   }
 
-  test("Catalyst tree-aggregation path matches flatMapGroups path exactly") {
-    import spark.implicits._
-    val rng = new scala.util.Random(99)
-    val items = (0 until 15).map(i => s"tt$i")
-    val df = Seq.fill(400)(rng.shuffle(items).take(1 + rng.nextInt(7))).toDF("items")
-      .repartition(5) // force multiple map-side partial trees per group
-    for (parts <- Seq(2, 5)) {
-      val viaGroups = itemsetsOf(new FPGrowth()
-        .setMinSupport(0.03).setNumPartitions(parts).fit(df))
-      val viaAgg = itemsetsOf(new FPGrowth()
-        .setMinSupport(0.03).setNumPartitions(parts).setTreeAggregation(true).fit(df))
-      assert(viaAgg == viaGroups, s"parts=$parts")
-      assert(viaAgg.nonEmpty)
-    }
-  }
-
   test("association rules match MLlib (confidence + support) and compute lift") {
     import spark.implicits._
     val model = new FPGrowth().setMinSupport(0.4).setMinConfidence(0.6).fit(trainDF)
@@ -179,10 +164,22 @@ class FPGrowthSpec extends AnyFunSuite {
 
   test("duplicate items in a transaction are rejected") {
     import spark.implicits._
+    // Other suites' memoized tables share this session's cache, so count
+    // its entries instead of clearing it. numCachedEntries is private[sql]
+    // to Scala but public in bytecode.
+    val cache = spark.sharedState.cacheManager
+    def cachedEntries: Int =
+      cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val cachedBefore = cachedEntries
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val bad = Seq(Seq("a", "a", "b")).toDF("items")
     val ex = intercept[Exception] {
       new FPGrowth().setMinSupport(0.1).fit(bad).freqItemsets.count()
     }
     assert(ex.getMessage != null)
+    // the failed fit releases what it cached: its input and the itemsets
+    assert(bad.select($"items").where($"items".isNotNull).storageLevel == StorageLevel.NONE)
+    assert(cachedEntries == cachedBefore)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
   }
 }

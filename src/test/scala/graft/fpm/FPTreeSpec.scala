@@ -65,23 +65,6 @@ class FPTreeSpec extends AnyFunSuite {
     }
   }
 
-  test("merge replays paths exactly") {
-    val rng = new scala.util.Random(7)
-    val txns = Seq.fill(60)(
-      Array.fill(1 + rng.nextInt(6))(rng.nextInt(8)).distinct.sorted)
-    val (a, b) = txns.splitAt(30)
-    val whole = new FPTree
-    txns.foreach(whole.add(_))
-    val ta = new FPTree
-    a.foreach(ta.add(_))
-    val tb = new FPTree
-    b.foreach(tb.add(_))
-    ta.merge(tb)
-    assert(
-      ta.extract(2L).map { case (p, c) => p.toList -> c }.toMap ==
-        whole.extract(2L).map { case (p, c) => p.toList -> c }.toMap)
-  }
-
   test("validateSuffix partitions the pattern set exactly once") {
     val numGroups = 3
     val groupOf = ItemGroups.balanced(numGroups, 8)
