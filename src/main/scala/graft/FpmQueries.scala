@@ -57,23 +57,49 @@ object FpmQueries {
     // outside the ConcurrentHashMap bin lock (see minedSequences twin)
     val key = Tables.cacheKey(spark, dir) + s"#itemmine#$subsetTag#" +
       s"${input.queryExecution.analyzed.semanticHash()}#$minCount"
-    val rows = probeMines.computeIfAbsent(key, _ => new Caches.Memo({
-      val m = new FPGrowth()
-        .setMinCount(minCount)
-        .setNumPartitions(spark.sparkContext.defaultParallelism)
-        .fit(input)
-      val r = m.freqItemsets
-        .where(size(col("items")) <= 3)
-        .select(array_join(array_sort(col("items")), ",").as("itemset"),
-          col("freq"))
-        .collect().map(x => (x.getString(0), x.getLong(1))).toSeq
-      m.freqItemsets.unpersist()
-      r
-    })).value
-    val spark2 = spark
-    import spark2.implicits._
+    itemsetFrame(spark, probeMines.computeIfAbsent(key,
+      _ => new Caches.Memo(cappedItemsets(input, minCount))).value)
+  }
+
+  /** The arity-capped itemset mine every itemset artifact is written
+    * from — the snapshot ([[minedItemsets]]) and every re-snapshot
+    * ([[itemsetFamily]]): FP-Growth at absolute `minCount`, itemsets of
+    * arity <= 3 as sorted comma-joined `(itemset, freq)` rows. The
+    * capped artifact is support-bounded metadata, so it is collected,
+    * and the fitted itemsets are unpersisted on every exit — a failed
+    * collect must not leave them cached. */
+  private def cappedItemsets(
+      input: DataFrame, minCount: Long): Seq[(String, Long)] = {
+    val m = new FPGrowth()
+      .setMinCount(minCount)
+      .setNumPartitions(input.sparkSession.sparkContext.defaultParallelism)
+      .fit(input)
+    try m.freqItemsets
+      .where(size(col("items")) <= 3)
+      .select(array_join(array_sort(col("items")), ",").as("itemset"),
+        col("freq"))
+      .collect().map(x => (x.getString(0), x.getLong(1))).toSeq
+    finally m.freqItemsets.unpersist()
+  }
+
+  private def itemsetFrame(
+      spark: SparkSession, rows: Seq[(String, Long)]): DataFrame = {
+    import spark.implicits._
     rows.toDF("itemset", "freq")
   }
+
+  /** The itemset family of [[graft.streaming.ArtifactStream.epochStep]]:
+    * a batch charges its row count, folds by FUP
+    * ([[graft.fpm.ItemsetRefresh.fold]]), and re-mines the promoted
+    * corpus through [[cappedItemsets]] at `probe`. */
+  private[graft] def itemsetFamily(
+      minCountUni: Long, probe: Long): graft.streaming.ArtifactStream.Family =
+    graft.streaming.ArtifactStream.Family(
+      deltaSize = _.count(),
+      fold = (artifact, batch, _, cum) => graft.fpm.ItemsetRefresh.fold(
+        artifact, batch, "items", minCountUni, cum),
+      remine = corpus =>
+        itemsetFrame(corpus.sparkSession, cappedItemsets(corpus, probe)))
 
   def model(spark: SparkSession, dir: String): FPGrowthModel =
     models.computeIfAbsent(Tables.cacheKey(spark, dir), _ =>
@@ -466,12 +492,11 @@ object FpmQueries {
     // driver-side counter misses on both ends.
     graft.streaming.ArtifactStream.foldAvailableNow(
         spark, base, artDir, in) { (batch, sibling) =>
-      val cum = graft.Fs.readCounter(artDir, "cum") + batch.count()
-      graft.fpm.ItemsetRefresh.fold(
-          spark.read.parquet(artDir.toString), batch, "items",
-          minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
+      graft.streaming.ArtifactStream.counterFold(
+          spark, artDir, sibling, batch.count()) { (artifact, cum) =>
+        graft.fpm.ItemsetRefresh.fold(
+          artifact, batch, "items", minCountUni, cum)
+      }
     }
     spark.read.parquet(artDir.toString)
       .where(col("freq") >= minCountUni)
@@ -521,7 +546,8 @@ object FpmQueries {
    * trigger also RE-BASES: the union corpus promotes to the next
    * epoch's base and the absorbed ingest dirs are swept at the next
    * batch, so the record and the re-mine input stay epoch-sized over
-   * an unbounded stream (see [[autoResnapshotBatch]]).
+   * an unbounded stream (see
+   * [[graft.streaming.ArtifactStream.epochStep]]).
    */
   def itemsetAutoResnapshot(spark: SparkSession, dir: String): DataFrame = {
     val b = Tables.orderBrandBaskets(spark, dir)
@@ -537,7 +563,6 @@ object FpmQueries {
     val base = graft.Fs.staged(java.nio.file.Paths.get(
       "/tmp", "graft-q199-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
     val artDir = base.resolve("itemsets")
-    val ingested = base.resolve("ingested")
     minedItemsets(spark, dir, "old211", old, probe)
       .write.parquet(artDir.toString)
     val in = base.resolve("in").toString
@@ -547,87 +572,12 @@ object FpmQueries {
     }
     graft.streaming.ArtifactStream.foldAvailableNowWithId(
         spark, base, artDir, in) { (batch, id, sibling) =>
-      autoResnapshotBatch(spark, old, ingested, base.resolve("corpus"),
-        artDir, sibling, batch, id, minCountUni, headroom, probe)
+      graft.streaming.ArtifactStream.epochStep(spark,
+        itemsetFamily(minCountUni, probe), old, base, artDir, sibling,
+        batch, id, headroom)
     }
     spark.read.parquet(artDir.toString)
       .where(col("freq") >= minCountUni)
-  }
-
-  /** One q199 micro-batch — the headroom-watch branch: durable
-    * epoch-scoped, id-keyed ingest record (idempotent under
-    * redelivery-after-crash: the same id overwrites its own dir), then
-    * either the FUP fold or, past 60% of the headroom, the restoring
-    * re-mine over the CURRENT EPOCH's corpus base ∪ its ingest record
-    * (which subsumes this batch's fold and resets the cumulative
-    * budget). Every piece of state — artifact, `_cum_`, `_snap_`, and
-    * the `_epoch_` counter that keys the re-base — commits through the
-    * caller's one atomic swap.
-    *
-    * RE-BASE AT SNAPSHOT TIME (VERDICT r15 #4): the trigger first
-    * PROMOTES the union corpus to `corpus/e<epoch+1>` (re-run-safe: a
-    * crash before the swap leaves residue the redelivered batch
-    * overwrites), mines the promoted copy, and commits `_epoch_+1`
-    * with the swap — after which the absorbed `ingested/e<epoch>` dirs
-    * and the old base are unreferenced and the NEXT batch's lazy
-    * [[graft.Fs.sweepBelowEpoch]] reclaims them. A year-long stream's
-    * re-mine input and dir listing stay EPOCH-sized (bounded by the
-    * headroom budget), not lifetime-sized — mirroring the `_applied_`
-    * marker compaction. Epoch 0's base is the caller's `old` frame
-    * (the warehouse's existing partitions); epoch n>=1 reads the
-    * promoted parquet base. At warehouse scale the promotion is a
-    * partition-manifest update (the new snapshot's corpus = base
-    * partitions + absorbed ingest partitions), not a data copy — here
-    * the copy IS the manifest, same asymptotics as the re-mine's own
-    * corpus-sized pass it rides along with.
-    *
-    * Package-private so the crash-restart and two-epoch specs can
-    * drive the REAL branches; the declared row's closure is exactly
-    * this call. */
-  private[graft] def autoResnapshotBatch(
-      spark: SparkSession, old: DataFrame,
-      ingested: java.nio.file.Path, corpus: java.nio.file.Path,
-      artDir: java.nio.file.Path,
-      sibling: java.nio.file.Path, batch: DataFrame, id: Long,
-      minCountUni: Long, headroom: Long, probe: Long): Unit = {
-    val epoch = graft.Fs.readCounter(artDir, "epoch")
-    // lazy sweep of epochs a committed re-base absorbed — pure cleanup
-    graft.Fs.sweepBelowEpoch(ingested, epoch)
-    graft.Fs.sweepBelowEpoch(corpus, epoch)
-    batch.coalesce(1).write.mode("overwrite")
-      .parquet(ingested.resolve(s"e$epoch").resolve(s"b$id").toString)
-    val cum = graft.Fs.readCounter(artDir, "cum") + batch.count()
-    val snaps = graft.Fs.readCounter(artDir, "snap")
-    if (5L * cum >= 3L * headroom) {
-      val base =
-        if (epoch == 0L) old
-        else spark.read.parquet(corpus.resolve(s"e$epoch").toString)
-      val promoted = corpus.resolve(s"e${epoch + 1L}")
-      graft.Fs.deleteRecursively(promoted) // pre-swap crash residue
-      base.unionByName(spark.read.parquet(s"$ingested/e$epoch/b*"))
-        .write.parquet(promoted.toString)
-      val m2 = new FPGrowth()
-        .setMinCount(probe)
-        .setNumPartitions(spark.sparkContext.defaultParallelism)
-        .fit(spark.read.parquet(promoted.toString))
-      m2.freqItemsets
-        .where(size(col("items")) <= 3)
-        .select(array_join(array_sort(col("items")), ",").as("itemset"),
-          col("freq"))
-        .coalesce(1).write.parquet(sibling.toString)
-      m2.freqItemsets.unpersist()
-      graft.Fs.writeCounter(sibling, "cum", 0L)
-      graft.Fs.writeCounter(sibling, "snap", snaps + 1L)
-      graft.Fs.writeCounter(sibling, "epoch", epoch + 1L)
-    } else {
-      graft.fpm.ItemsetRefresh.fold(
-          spark.read.parquet(artDir.toString), batch, "items",
-          minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
-      graft.Fs.writeCounter(sibling, "snap", snaps)
-      graft.Fs.writeCounter(sibling, "epoch", epoch)
-    }
   }
 
   /** Same statement as q03: pre-trigger folds + the auto re-snapshot +
@@ -692,12 +642,11 @@ object FpmQueries {
         spark, base, artDir, in) { (batch, sibling) =>
       val adds = batch.where(col("op") === 1).select(col("items"))
       val dels = batch.where(col("op") === -1).select(col("items"))
-      val cum = graft.Fs.readCounter(artDir, "cum") + adds.count()
-      graft.fpm.ItemsetRefresh.foldSigned(
-          spark.read.parquet(artDir.toString), adds, dels, "items",
-          minCountNew, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
+      graft.streaming.ArtifactStream.counterFold(
+          spark, artDir, sibling, adds.count()) { (artifact, cum) =>
+        graft.fpm.ItemsetRefresh.foldSigned(
+          artifact, adds, dels, "items", minCountNew, cum)
+      }
     }
     spark.read.parquet(artDir.toString)
       .where(col("freq") >= minCountNew)

@@ -161,41 +161,6 @@ object Fs {
       stale.foreach(deleteRecursively)
     }
 
-  /**
-   * Applied-marker read-merge-swap commit for ADDITIVE foreachBatch
-   * artifact folds (q154/q188/q190/q194/q196/q197 — every stream whose
-   * merge is NOT replay-idempotent: additive, signed, or subtractive
-   * folds alike): unlike the max-merge sketch
-   * streams (HLL/KMV, replay-idempotent by algebra), re-folding a
-   * redelivered batch double-counts, so each batch id commits exactly
-   * once. A batch id AT OR BELOW the largest applied marker is a
-   * replay and `write` is skipped (returns false) — Structured
-   * Streaming batch ids are strictly increasing per query, so
-   * monotonicity makes the maximum marker alone a complete replay
-   * record. That is also what keeps the marker set BOUNDED: each swap
-   * carries only the newest [[MarkerRetention]] markers into the
-   * sibling (compaction; without it a long-lived stream accumulates
-   * one marker per batch forever and every swap re-copies all of
-   * them — O(batches²) file ops over the stream's life). Otherwise
-   * `write(sibling)` materializes the folded artifact into a sibling
-   * dir, retained markers are carried over (underscore-prefixed,
-   * invisible to parquet readers), this batch's marker is added, and
-   * sibling atomically renames over `artDir` — marker and fold commit
-   * in ONE rename.
-   *
-   * DURABILITY SCOPE: the crash-anywhere case analysis below covers
-   * PROCESS crashes (kill -9, OOM, driver loss) — the protocol never
-   * fsyncs file contents or the parent directory, so under POWER LOSS
-   * / OS crash a rename may be durable while a sibling member's
-   * contents (a counter, the `_erased` key record, even parquet
-   * footers) are not, and "either old artifact or complete new one"
-   * does not hold. That matches the deployment model: these artifacts
-   * live on object stores / replicated filesystems whose own commit
-   * semantics (or a re-run from the stream checkpoint) cover machine
-   * loss. A caller needing single-disk power-loss durability must
-   * fsync each sibling file and the parent dir before the publish
-   * rename.
-   */
   /** Repair crash residue before a swap decision. Case analysis over
     * every kill point of [[appliedMarkerSwap]] (write → markers →
     * retire(artDir→retired) → publish(sibling→artDir) → sweep):
@@ -237,6 +202,42 @@ object Fs {
     }
   }
 
+  /**
+   * Applied-marker read-merge-swap commit for ADDITIVE foreachBatch
+   * artifact folds (q154/q188/q190/q194/q196/q197/q199/q200/q203 —
+   * every stream whose merge is NOT replay-idempotent: additive,
+   * signed, or subtractive folds alike): unlike the max-merge sketch
+   * streams (HLL/KMV, replay-idempotent by algebra), re-folding a
+   * redelivered batch double-counts, so each batch id commits exactly
+   * once. A batch id AT OR BELOW the largest applied marker is a
+   * replay and `write` is skipped (returns false) — Structured
+   * Streaming batch ids are strictly increasing per query, so
+   * monotonicity makes the maximum marker alone a complete replay
+   * record. That is also what keeps the marker set BOUNDED: each swap
+   * carries only the newest [[MarkerRetention]] markers into the
+   * sibling (compaction; without it a long-lived stream accumulates
+   * one marker per batch forever and every swap re-copies all of
+   * them — O(batches²) file ops over the stream's life). Otherwise
+   * `write(sibling)` materializes the folded artifact into a sibling
+   * dir, retained markers are carried over (underscore-prefixed,
+   * invisible to parquet readers), this batch's marker is added, and
+   * sibling atomically renames over `artDir` — marker and fold commit
+   * in ONE rename.
+   *
+   * DURABILITY SCOPE: the crash-anywhere case analysis (in
+   * [[repairSwapResidue]]) covers
+   * PROCESS crashes (kill -9, OOM, driver loss) — the protocol never
+   * fsyncs file contents or the parent directory, so under POWER LOSS
+   * / OS crash a rename may be durable while a sibling member's
+   * contents (a counter, the `_erased` key record, even parquet
+   * footers) are not, and "either old artifact or complete new one"
+   * does not hold. That matches the deployment model: these artifacts
+   * live on object stores / replicated filesystems whose own commit
+   * semantics (or a re-run from the stream checkpoint) cover machine
+   * loss. A caller needing single-disk power-loss durability must
+   * fsync each sibling file and the parent dir before the publish
+   * rename.
+   */
   def appliedMarkerSwap(base: Path, artDir: Path, id: Long)(
       write: Path => Unit): Boolean = {
     repairSwapResidue(base, artDir)

@@ -1449,14 +1449,13 @@ object RelQueries {
     graft.streaming.ArtifactStream.foldAvailableNow(
         spark, base, artDir, in) { (batch, sibling) =>
       val keys = batch.select(col("user_id")).distinct()
-      val cum = graft.Fs.readCounter(artDir, "cum") + keys.count()
       val oldTouched = old.join(keys, Seq("user_id"), "left_semi")
       val newTouched = ev.join(keys, Seq("user_id"), "left_semi")
-      sp.foldTouched(
-          spark.read.parquet(artDir.toString), oldTouched, newTouched,
+      graft.streaming.ArtifactStream.counterFold(
+          spark, artDir, sibling, keys.count()) { (artifact, cum) =>
+        sp.foldTouched(artifact, oldTouched, newTouched,
           "user_id", "tsu", "event_id", "event_type", minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
+      }
     }
     spark.read.parquet(artDir.toString)
       .where(col("support") >= minCountUni)
@@ -1646,13 +1645,11 @@ object RelQueries {
     // `_cum_` state in the artifact dir (restart-safe, replay-aware)
     graft.streaming.ArtifactStream.foldAvailableNow(
         spark, base, artDir, in) { (batch, sibling) =>
-      val cum = graft.Fs.readCounter(artDir, "cum") +
-        batch.select(col("user_id")).distinct().count()
-      sp.fold(
-          spark.read.parquet(artDir.toString), batch,
+      graft.streaming.ArtifactStream.counterFold(
+          spark, artDir, sibling, distinctUsers(batch)) { (artifact, cum) =>
+        sp.fold(artifact, batch,
           "user_id", "tsu", "event_id", "event_type", minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
+      }
     }
     spark.read.parquet(artDir.toString)
       .where(col("support") >= minCountUni)
@@ -1683,7 +1680,7 @@ object RelQueries {
    * (the union corpus promotes to the next epoch's base, absorbed
    * ingest dirs are swept at the next batch), so the ingest record
    * and the re-mine input stay epoch-sized over an unbounded stream
-   * ([[seqAutoResnapshotBatch]]).
+   * ([[graft.streaming.ArtifactStream.epochStep]]).
    */
   def sequentialPatternAutoResnapshot(
       spark: SparkSession, dir: String): DataFrame = {
@@ -1702,7 +1699,6 @@ object RelQueries {
     minedSequences(spark, dir, "old17", old, probe,
         math.max(1L, nOld))
       .write.parquet(artDir.toString)
-    val ingested = base.resolve("ingested")
     // four key-disjoint quarter batches: each added user's WHOLE
     // history lives in exactly one file (the q190 routing contract)
     val in = base.resolve("in").toString
@@ -1712,64 +1708,53 @@ object RelQueries {
     }
     graft.streaming.ArtifactStream.foldAvailableNowWithId(
         spark, base, artDir, in) { (batch, id, sibling) =>
-      seqAutoResnapshotBatch(spark, old, ingested,
-        base.resolve("corpus"), artDir, sibling, batch, id,
-        minCountUni, headroom, probe)
+      graft.streaming.ArtifactStream.epochStep(spark,
+        seqFamily(minCountUni, probe), old, base, artDir, sibling,
+        batch, id, headroom)
     }
     spark.read.parquet(artDir.toString)
       .where(col("support") >= minCountUni)
   }
 
-  /** One q200 micro-batch — [[graft.FpmQueries.autoResnapshotBatch]]'s
-    * sequence twin, same epoch-keyed re-base protocol (see that
-    * scaladoc for the crash analysis): epoch-scoped id-keyed ingest
-    * record, lazy sweep of absorbed epochs, and at the 60% trigger the
-    * union corpus PROMOTES to `corpus/e<epoch+1>` before the re-mine,
-    * with `_cum_` reset, `_snap_` and `_epoch_` bumped — all committed
-    * by the caller's one atomic swap, so the ingest record and the
-    * re-mine input stay epoch-sized over an unbounded stream.
-    * Package-private for the two-epoch spec. */
-  private[graft] def seqAutoResnapshotBatch(
-      spark: SparkSession, old: DataFrame,
-      ingested: java.nio.file.Path, corpus: java.nio.file.Path,
-      artDir: java.nio.file.Path, sibling: java.nio.file.Path,
-      batch: DataFrame, id: Long,
-      minCountUni: Long, headroom: Long, probe: Long): Unit = {
-    val sp = graft.fpm.SequentialPatterns
-    val epoch = graft.Fs.readCounter(artDir, "epoch")
-    graft.Fs.sweepBelowEpoch(ingested, epoch)
-    graft.Fs.sweepBelowEpoch(corpus, epoch)
-    batch.coalesce(1).write.mode("overwrite")
-      .parquet(ingested.resolve(s"e$epoch").resolve(s"b$id").toString)
-    val cum = graft.Fs.readCounter(artDir, "cum") +
-      batch.select(col("user_id")).distinct().count()
-    val snaps = graft.Fs.readCounter(artDir, "snap")
-    if (5L * cum >= 3L * headroom) {
-      val baseDf =
-        if (epoch == 0L) old
-        else spark.read.parquet(corpus.resolve(s"e$epoch").toString)
-      val promoted = corpus.resolve(s"e${epoch + 1L}")
-      graft.Fs.deleteRecursively(promoted) // pre-swap crash residue
-      baseDf.unionByName(spark.read.parquet(s"$ingested/e$epoch/b*"))
-        .write.parquet(promoted.toString)
-      val current = spark.read.parquet(promoted.toString)
-      val nCur = current.select(col("user_id")).distinct().count()
-      sp.frequentSequences(current, "user_id", "tsu", "event_id",
-          "event_type", minSupportNum = probe,
-          minSupportDen = math.max(1L, nCur), maxLen = 3)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", 0L)
-      graft.Fs.writeCounter(sibling, "snap", snaps + 1L)
-      graft.Fs.writeCounter(sibling, "epoch", epoch + 1L)
-    } else {
-      sp.fold(spark.read.parquet(artDir.toString), batch,
-          "user_id", "tsu", "event_id", "event_type", minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
-      graft.Fs.writeCounter(sibling, "snap", snaps)
-      graft.Fs.writeCounter(sibling, "epoch", epoch)
-    }
-  }
+  private def distinctUsers(batch: DataFrame): Long =
+    batch.select(col("user_id")).distinct().count()
+
+  /** The key-disjoint sequence family of
+    * [[graft.streaming.ArtifactStream.epochStep]]: a batch charges its
+    * distinct new users, folds by [[graft.fpm.SequentialPatterns.fold]],
+    * and the promoted corpus re-mines at the exact rational
+    * `probe/nCurrentUsers`, so the miner's integer ceil lands on `probe`
+    * precisely. */
+  private[graft] def seqFamily(
+      minCountUni: Long, probe: Long): graft.streaming.ArtifactStream.Family =
+    graft.streaming.ArtifactStream.Family(
+      deltaSize = distinctUsers,
+      fold = (artifact, batch, _, cum) => graft.fpm.SequentialPatterns.fold(
+        artifact, batch, "user_id", "tsu", "event_id", "event_type",
+        minCountUni, cum),
+      remine = corpus => graft.fpm.SequentialPatterns.frequentSequences(
+        corpus, "user_id", "tsu", "event_id", "event_type",
+        minSupportNum = probe,
+        minSupportDen = math.max(1L, distinctUsers(corpus)), maxLen = 3))
+
+  /** The touched-key family: [[seqFamily]] with the
+    * [[graft.fpm.SequentialPatterns.foldTouched]] fold — the batch's
+    * keys' OLD containment terms come from the current epoch's corpus
+    * base (post-trigger batches are key-disjoint from absorbed ones by
+    * the routing contract, but reading the epoch base keeps the
+    * semantics right regardless), their NEW terms from that history ∪
+    * this batch's delta. The only family that reads the epoch base. */
+  private[graft] def seqTouchFamily(
+      minCountUni: Long, probe: Long): graft.streaming.ArtifactStream.Family =
+    seqFamily(minCountUni, probe).copy(
+      fold = (artifact, batch, epochBase, cum) => {
+        val oldTouched = epochBase().join(
+          batch.select(col("user_id")).distinct(), Seq("user_id"),
+          "left_semi")
+        graft.fpm.SequentialPatterns.foldTouched(artifact, oldTouched,
+          oldTouched.unionByName(batch), "user_id", "tsu", "event_id",
+          "event_type", minCountUni, cum)
+      })
 
   /**
    * q: TOUCHED-KEY AUTO-RE-SNAPSHOT — the third FUP bound family gets
@@ -1825,67 +1810,12 @@ object RelQueries {
     }
     graft.streaming.ArtifactStream.foldAvailableNowWithId(
         spark, base, artDir, in) { (batch, id, sibling) =>
-      seqTouchAutoResnapshotBatch(spark, old, ingested = base.resolve("ingested"),
-        corpus = base.resolve("corpus"), artDir = artDir, sibling = sibling,
-        batch = batch, id = id, minCountUni = minCountUni,
-        headroom = headroom, probe = probe)
+      graft.streaming.ArtifactStream.epochStep(spark,
+        seqTouchFamily(minCountUni, probe), old, base, artDir, sibling,
+        batch, id, headroom)
     }
     spark.read.parquet(artDir.toString)
       .where(col("support") >= minCountUni)
-  }
-
-  /** One q203 micro-batch — [[seqAutoResnapshotBatch]] with the
-    * touched-key fold in the non-trigger branch: the batch's keys'
-    * OLD containment terms come from the CURRENT EPOCH's corpus base
-    * (post-trigger batches are key-disjoint from absorbed ones by the
-    * routing contract, but reading the epoch base keeps the semantics
-    * right regardless), their NEW terms from base-history ∪ this
-    * batch's delta. Trigger branch and re-base protocol are q199's
-    * verbatim (see [[graft.FpmQueries.autoResnapshotBatch]] for the
-    * crash analysis). Package-private for the spec. */
-  private[graft] def seqTouchAutoResnapshotBatch(
-      spark: SparkSession, old: DataFrame,
-      ingested: java.nio.file.Path, corpus: java.nio.file.Path,
-      artDir: java.nio.file.Path, sibling: java.nio.file.Path,
-      batch: DataFrame, id: Long,
-      minCountUni: Long, headroom: Long, probe: Long): Unit = {
-    val sp = graft.fpm.SequentialPatterns
-    val epoch = graft.Fs.readCounter(artDir, "epoch")
-    graft.Fs.sweepBelowEpoch(ingested, epoch)
-    graft.Fs.sweepBelowEpoch(corpus, epoch)
-    batch.coalesce(1).write.mode("overwrite")
-      .parquet(ingested.resolve(s"e$epoch").resolve(s"b$id").toString)
-    val keys = batch.select(col("user_id")).distinct()
-    val cum = graft.Fs.readCounter(artDir, "cum") + keys.count()
-    val snaps = graft.Fs.readCounter(artDir, "snap")
-    val baseDf =
-      if (epoch == 0L) old
-      else spark.read.parquet(corpus.resolve(s"e$epoch").toString)
-    if (5L * cum >= 3L * headroom) {
-      val promoted = corpus.resolve(s"e${epoch + 1L}")
-      graft.Fs.deleteRecursively(promoted) // pre-swap crash residue
-      baseDf.unionByName(spark.read.parquet(s"$ingested/e$epoch/b*"))
-        .write.parquet(promoted.toString)
-      val current = spark.read.parquet(promoted.toString)
-      val nCur = current.select(col("user_id")).distinct().count()
-      sp.frequentSequences(current, "user_id", "tsu", "event_id",
-          "event_type", minSupportNum = probe,
-          minSupportDen = math.max(1L, nCur), maxLen = 3)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", 0L)
-      graft.Fs.writeCounter(sibling, "snap", snaps + 1L)
-      graft.Fs.writeCounter(sibling, "epoch", epoch + 1L)
-    } else {
-      val oldTouched = baseDf.join(keys, Seq("user_id"), "left_semi")
-      val newTouched = oldTouched.unionByName(batch)
-      sp.foldTouched(
-          spark.read.parquet(artDir.toString), oldTouched, newTouched,
-          "user_id", "tsu", "event_id", "event_type", minCountUni, cum)
-        .coalesce(1).write.parquet(sibling.toString)
-      graft.Fs.writeCounter(sibling, "cum", cum)
-      graft.Fs.writeCounter(sibling, "snap", snaps)
-      graft.Fs.writeCounter(sibling, "epoch", epoch)
-    }
   }
 
   /** q121's statement over any user subset — the erasure oracle

@@ -139,9 +139,9 @@ class ItemsetRefreshSpec extends AnyFunSuite {
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           graft.Fs.appliedMarkerSwap(base, art, id) { sib =>
-            graft.FpmQueries.autoResnapshotBatch(spark, old, ingested,
-              base.resolve("corpus"), art, sib, batch, id,
-              minCountUni = 100L, headroom = 4L, probe = 1L)
+            graft.streaming.ArtifactStream.epochStep(spark,
+              graft.FpmQueries.itemsetFamily(minCountUni = 100L, probe = 1L),
+              old, base, art, sib, batch, id, headroom = 4L)
           }
           if (id == 1L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after snap commit")
@@ -200,9 +200,10 @@ class ItemsetRefreshSpec extends AnyFunSuite {
       Seq(Seq("b")), Seq(Seq("a")), Seq(Seq("b")))
     batches.zipWithIndex.foreach { case (rows, id) =>
       graft.Fs.appliedMarkerSwap(base, art, id.toLong) { sib =>
-        graft.FpmQueries.autoResnapshotBatch(spark, old, ingested,
-          base.resolve("corpus"), art, sib, rows.toDF("items"),
-          id.toLong, minCountUni = 100L, headroom = 2L, probe = 1L)
+        graft.streaming.ArtifactStream.epochStep(spark,
+          graft.FpmQueries.itemsetFamily(minCountUni = 100L, probe = 1L),
+          old, base, art, sib, rows.toDF("items"), id.toLong,
+          headroom = 2L)
       }
     }
     val got = spark.read.parquet(art.toString)
@@ -219,6 +220,41 @@ class ItemsetRefreshSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(base.resolve("corpus").resolve("e1")))
     assert(java.nio.file.Files.exists(base.resolve("corpus").resolve("e2")))
     assert(java.nio.file.Files.exists(ingested.resolve("e2").resolve("b4")))
+    graft.Fs.deleteRecursively(base)
+  }
+
+  test("an itemset batch overshooting the whole headroom re-mines instead of require-failing") {
+    // the itemset twin of SequentialPatternsSpec's overshoot test: the
+    // 60% trigger is checked BEFORE any fold, so one batch that jumps
+    // past 100% of the headroom routes to the union re-mine — the
+    // fold's FUP require (cum 5 >= minCount 3, which would refuse it)
+    // is never consulted on that path
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-item-overshoot")
+    val art = base.resolve("art")
+    val old = Seq(Seq("a", "b"), Seq("a"), Seq("b"), Seq("a", "b"))
+      .toDF("items")
+    Seq(("a", 3L), ("b", 3L), ("a,b", 2L)).toDF("itemset", "freq")
+      .coalesce(1).write.parquet(art.toString)
+    // headroom 2, ONE batch of 5 rows, one of them carrying an item
+    // ("c") the old snapshot never saw — only a re-mine can count it
+    val giant = Seq(Seq("a"), Seq("a", "b"), Seq("b"), Seq("a", "b", "c"),
+      Seq("c")).toDF("items")
+    graft.Fs.appliedMarkerSwap(base, art, 0L) { sib =>
+      graft.streaming.ArtifactStream.epochStep(spark,
+        graft.FpmQueries.itemsetFamily(minCountUni = 3L, probe = 1L),
+        old, base, art, sib, giant, 0L, headroom = 2L)
+    }
+    val got = spark.read.parquet(art.toString)
+      .as[(String, Long)].collect().toMap
+    // exact counts over old ∪ giant at minCount 1, arity <= 3
+    assert(got == Map("a" -> 6L, "b" -> 6L, "c" -> 2L, "a,b" -> 4L,
+      "a,c" -> 1L, "b,c" -> 1L, "a,b,c" -> 1L),
+      s"overshoot batch must land on the union re-mine: $got")
+    assert(graft.Fs.readCounter(art, "snap") == 1L)
+    assert(graft.Fs.readCounter(art, "epoch") == 1L)
+    assert(graft.Fs.readCounter(art, "cum") == 0L,
+      "the overshoot batch is absorbed by the snapshot, not counted as a fold")
     graft.Fs.deleteRecursively(base)
   }
 

@@ -611,10 +611,11 @@ class SequentialPatternsSpec extends AnyFunSuite {
       Seq((14L, 1L, 1401L, "c")))
     batches.zipWithIndex.foreach { case (rows, id) =>
       graft.Fs.appliedMarkerSwap(base, art, id.toLong) { sib =>
-        graft.RelQueries.seqAutoResnapshotBatch(spark, old, ingested,
-          base.resolve("corpus"), art, sib,
+        graft.streaming.ArtifactStream.epochStep(spark,
+          graft.RelQueries.seqFamily(minCountUni = 100L, probe = 1L),
+          old, base, art, sib,
           rows.toDF("user_id", "tsu", "event_id", "event_type"),
-          id.toLong, minCountUni = 100L, headroom = 2L, probe = 1L)
+          id.toLong, headroom = 2L)
       }
     }
     val got = spark.read.parquet(art.toString)
@@ -635,6 +636,86 @@ class SequentialPatternsSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(base.resolve("corpus").resolve("e1")))
     assert(java.nio.file.Files.exists(base.resolve("corpus").resolve("e2")))
     assert(java.nio.file.Files.exists(ingested.resolve("e2").resolve("b4")))
+    graft.Fs.deleteRecursively(base)
+  }
+
+  test("q200 snap state (cum reset + epoch re-base) survives a crash-restart") {
+    // the q199 crash pin on the KEY-DISJOINT sequence branch: the snap
+    // batch's swap committed (re-mined artifact + _cum_0 + _snap_1 +
+    // _epoch_1 + promoted corpus), then the process died before the
+    // checkpoint commit. On restart the snap batch is redelivered under
+    // the SAME id and must be marker-skipped; the next new-user batch
+    // must fold with cum restarting from the durable zero.
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-seq-snap-recovery")
+    val art = base.resolve("art")
+    val ingested = base.resolve("ingested")
+    val cyc = Seq("v", "c", "p")
+    val oldRows =
+      (0 until 9).map(k => (1L, k.toLong + 1, 100L + k, cyc(k % 3))) ++
+        Seq((2L, 1L, 201L, "v"), (2L, 2L, 202L, "p"),
+          (3L, 1L, 301L, "c"), (3L, 2L, 302L, "c"))
+    val old = oldRows.toDF("user_id", "tsu", "event_id", "event_type")
+    SequentialPatterns.frequentSequences(old, "user_id", "tsu",
+        "event_id", "event_type", 1L, 3L, 3)
+      .coalesce(1).write.parquet(art.toString)
+    // one new user per batch at headroom 2: user 10 (fold, cum 1),
+    // user 11 (SNAP at cum 2 + crash), user 12 (fold after restart)
+    val deltas = Seq(
+      Seq((10L, 1L, 1001L, "v"), (10L, 2L, 1002L, "c")),
+      Seq((11L, 1L, 1101L, "p"), (11L, 2L, 1102L, "p")),
+      Seq((12L, 1L, 1201L, "c"), (12L, 2L, 1202L, "v")))
+    val in = base.resolve("in").toString
+    deltas.zipWithIndex.foreach { case (rows, i) =>
+      val mode = if (i == 0) "overwrite" else "append"
+      rows.toDF("user_id", "tsu", "event_id", "event_type")
+        .coalesce(1).write.mode(mode).parquet(in)
+    }
+    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def run(): Unit = {
+      val schema = spark.read.parquet(in).schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(in)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          graft.Fs.appliedMarkerSwap(base, art, id) { sib =>
+            graft.streaming.ArtifactStream.epochStep(spark,
+              graft.RelQueries.seqFamily(minCountUni = 100L, probe = 1L),
+              old, base, art, sib, batch, id, headroom = 2L)
+          }
+          if (id == 1L && crashed.compareAndSet(false, true))
+            throw new RuntimeException("injected crash after snap commit")
+          ()
+        }
+        .option("checkpointLocation", base.resolve("ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(crashed.get, "the injected crash must have fired")
+    assert(graft.Fs.readCounter(art, "snap") == 1L, "snap committed pre-crash")
+    run() // restart: batch 1 marker-skipped, batch 2 folds
+    val got = spark.read.parquet(art.toString)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    val union = (oldRows ++ deltas.flatten)
+      .toDF("user_id", "tsu", "event_id", "event_type")
+    val want = SequentialPatterns.frequentSequences(union, "user_id",
+        "tsu", "event_id", "event_type", 1L, 6L, 3)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got == want,
+      "crash + redelivery must land exactly on the union re-mine")
+    assert(graft.Fs.readCounter(art, "snap") == 1L,
+      "the redelivered snap batch must be marker-skipped, not re-mined")
+    assert(graft.Fs.readCounter(art, "cum") == 1L,
+      "cum restarts from the durable zero, counting only the post-snap user")
+    assert(graft.Fs.readCounter(art, "epoch") == 1L)
+    assert(java.nio.file.Files.exists(
+      base.resolve("corpus").resolve("e1")))
+    assert(!java.nio.file.Files.exists(ingested.resolve("e0")),
+      "the post-restart batch sweeps the absorbed epoch-0 dirs")
     graft.Fs.deleteRecursively(base)
   }
 
@@ -659,10 +740,11 @@ class SequentialPatternsSpec extends AnyFunSuite {
     val giant = (10L to 14L).flatMap(u =>
       Seq((u, 1L, u * 100 + 1, "v"), (u, 2L, u * 100 + 2, "c")))
     graft.Fs.appliedMarkerSwap(base, art, 0L) { sib =>
-      graft.RelQueries.seqAutoResnapshotBatch(spark, old,
-        base.resolve("ingested"), base.resolve("corpus"), art, sib,
+      graft.streaming.ArtifactStream.epochStep(spark,
+        graft.RelQueries.seqFamily(minCountUni = 3L, probe = 1L),
+        old, base, art, sib,
         giant.toDF("user_id", "tsu", "event_id", "event_type"),
-        0L, minCountUni = 3L, headroom = 2L, probe = 1L)
+        0L, headroom = 2L)
     }
     val got = spark.read.parquet(art.toString)
       .as[(String, Int, Long)].collect()
@@ -721,9 +803,9 @@ class SequentialPatternsSpec extends AnyFunSuite {
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           graft.Fs.appliedMarkerSwap(base, art, id) { sib =>
-            graft.RelQueries.seqTouchAutoResnapshotBatch(spark, oldDf,
-              ingested, base.resolve("corpus"), art, sib, batch, id,
-              minCountUni = 100L, headroom = 2L, probe = 1L)
+            graft.streaming.ArtifactStream.epochStep(spark,
+              graft.RelQueries.seqTouchFamily(minCountUni = 100L, probe = 1L),
+              oldDf, base, art, sib, batch, id, headroom = 2L)
           }
           if (id == 1L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after snap commit")
@@ -758,6 +840,106 @@ class SequentialPatternsSpec extends AnyFunSuite {
       base.resolve("corpus").resolve("e1")))
     assert(!java.nio.file.Files.exists(ingested.resolve("e0")),
       "the post-restart batch sweeps the absorbed epoch-0 dirs")
+    graft.Fs.deleteRecursively(base)
+  }
+
+  test("two-epoch touched-key auto re-snapshot: the second trigger re-mines FROM the promoted corpus") {
+    // the touched-key twin of the two-epoch tests: epoch >= 1's re-mine
+    // must read corpus/e<n>, and the touch fold between the triggers
+    // must take its OLD terms from that promoted base — the final
+    // artifact can only equal the exact union counts if epoch 0's
+    // ingested deltas were carried forward.
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-touch-two-epoch")
+    val art = base.resolve("art")
+    val ingested = base.resolve("ingested")
+    val cyc = Seq("v", "c", "p")
+    val oldRows =
+      (0 until 9).map(k => (1L, k.toLong + 1, 100L + k, cyc(k % 3))) ++
+        Seq((2L, 1L, 201L, "v"), (3L, 1L, 301L, "c"), (4L, 1L, 401L, "p"),
+          (5L, 1L, 501L, "v"), (6L, 1L, 601L, "c"))
+    val old = oldRows.toDF("user_id", "tsu", "event_id", "event_type")
+    SequentialPatterns.frequentSequences(old, "user_id", "tsu",
+        "event_id", "event_type", 1L, 6L, 3)
+      .coalesce(1).write.parquet(art.toString)
+    // five single-key touch batches at headroom 2: fold, SNAP(e1),
+    // fold, SNAP(e2), fold — the e2 re-mine reads corpus/e1, and the
+    // trailing fold's sweep reclaims epoch 1's absorbed dirs
+    val batches = Seq(
+      Seq((2L, 2L, 202L, "c")),
+      Seq((3L, 2L, 302L, "p"), (3L, 3L, 303L, "v")),
+      Seq((4L, 2L, 402L, "p")),
+      Seq((5L, 2L, 502L, "c"), (5L, 3L, 503L, "p")),
+      Seq((6L, 2L, 602L, "v")))
+    batches.zipWithIndex.foreach { case (rows, id) =>
+      graft.Fs.appliedMarkerSwap(base, art, id.toLong) { sib =>
+        graft.streaming.ArtifactStream.epochStep(spark,
+          graft.RelQueries.seqTouchFamily(minCountUni = 100L, probe = 1L),
+          old, base, art, sib,
+          rows.toDF("user_id", "tsu", "event_id", "event_type"),
+          id.toLong, headroom = 2L)
+      }
+    }
+    val got = spark.read.parquet(art.toString)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    val union = (oldRows ++ batches.flatten)
+      .toDF("user_id", "tsu", "event_id", "event_type")
+    val want = SequentialPatterns.frequentSequences(union, "user_id",
+        "tsu", "event_id", "event_type", 1L, 6L, 3)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got == want,
+      s"second-epoch touch re-mine lost epoch 0's absorbed ingest")
+    assert(graft.Fs.readCounter(art, "snap") == 2L, "two triggers fired")
+    assert(graft.Fs.readCounter(art, "epoch") == 2L)
+    assert(graft.Fs.readCounter(art, "cum") == 1L,
+      "the trailing touch fold landed after the second trigger")
+    assert(!java.nio.file.Files.exists(ingested.resolve("e0")))
+    assert(!java.nio.file.Files.exists(ingested.resolve("e1")))
+    assert(!java.nio.file.Files.exists(base.resolve("corpus").resolve("e1")))
+    assert(java.nio.file.Files.exists(base.resolve("corpus").resolve("e2")))
+    assert(java.nio.file.Files.exists(ingested.resolve("e2").resolve("b4")))
+    graft.Fs.deleteRecursively(base)
+  }
+
+  test("a touch batch overshooting the whole headroom re-mines instead of require-failing") {
+    // the overshoot backstop on the TOUCHED-KEY family: one batch
+    // touching 3 keys at headroom 2 (and minCount 3, so foldTouched's
+    // require would refuse it) must route to the union re-mine
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-touch-overshoot")
+    val art = base.resolve("art")
+    val cyc = Seq("v", "c", "p")
+    val oldRows =
+      (0 until 9).map(k => (1L, k.toLong + 1, 100L + k, cyc(k % 3))) ++
+        Seq((2L, 1L, 201L, "v"), (3L, 1L, 301L, "c"), (4L, 1L, 401L, "p"))
+    val old = oldRows.toDF("user_id", "tsu", "event_id", "event_type")
+    SequentialPatterns.frequentSequences(old, "user_id", "tsu",
+        "event_id", "event_type", 1L, 4L, 3)
+      .coalesce(1).write.parquet(art.toString)
+    val giant = Seq((2L, 2L, 202L, "c"), (3L, 2L, 302L, "p"),
+      (3L, 3L, 303L, "v"), (4L, 2L, 402L, "v"))
+    graft.Fs.appliedMarkerSwap(base, art, 0L) { sib =>
+      graft.streaming.ArtifactStream.epochStep(spark,
+        graft.RelQueries.seqTouchFamily(minCountUni = 3L, probe = 1L),
+        old, base, art, sib,
+        giant.toDF("user_id", "tsu", "event_id", "event_type"),
+        0L, headroom = 2L)
+    }
+    val got = spark.read.parquet(art.toString)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    val want = SequentialPatterns.frequentSequences(
+        (oldRows ++ giant).toDF("user_id", "tsu", "event_id", "event_type"),
+        "user_id", "tsu", "event_id", "event_type", 1L, 4L, 3)
+      .as[(String, Int, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got == want, "overshoot touch batch must land on the union re-mine")
+    assert(graft.Fs.readCounter(art, "snap") == 1L)
+    assert(graft.Fs.readCounter(art, "epoch") == 1L)
+    assert(graft.Fs.readCounter(art, "cum") == 0L,
+      "the overshoot batch is absorbed by the snapshot, not counted as a fold")
     graft.Fs.deleteRecursively(base)
   }
 
