@@ -323,7 +323,7 @@ object FpmQueries {
    * run, `reference pfp/AssociationRules.scala:60-81`). This row closes
    * it: the q170 refresh output (old-snapshot artifact + delta fold,
    * bit-equal to the union re-mine by the FUP bound) feeds
-   * [[graft.fpm.AssociationRules.fromFreqItemsets]] directly — counts
+   * [[graft.fpm.AssociationRules.derive]] directly — counts
    * are already in the artifact, so rule derivation is pure count
    * algebra over it, no corpus rescan. Because refresh == re-mine bit
    * for bit and the rule chain is deterministic IEEE over those counts,
@@ -331,36 +331,38 @@ object FpmQueries {
    * statement verbatim over the (whole) union corpus.
    *
    * Scale shape: rule DERIVATION touches only the artifact (support-
-   * bounded rows) — one canonicalized equi-join for antecedent counts
-   * plus a broadcast of the L1 table (item-domain-sized) — plus the
-   * basket count for the support denominator. The DECLARED row also
+   * bounded rows, collected once) — one driver-side hash lookup per
+   * candidate for its antecedent count and the artifact's own L1 rows
+   * for consequent supports — plus the basket count for the support
+   * denominator. The DECLARED row also
    * re-runs the q170 build+refresh so it owns an artifact to derive
    * from (each driver row is self-contained); a production pipeline
    * derives from the maintained artifact and pays only the
    * artifact-sized algebra per refresh.
    */
-  def rulesFromRefreshedArtifact(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // ONE evaluation of the refresh plan: the artifact is support-
-    // bounded, so it collects whole (bounded metadata) and re-enters
-    // as a LocalRelation — fromFreqItemsets references its input three
-    // times (candidates + antecedent counts + L1), which would re-run
-    // the delta fold per reference on the live plan.
-    val rows: Array[(String, Long)] = itemsetRefreshIn(spark, dir, "q187")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val n = Tables.orderBrandBaskets(spark, dir).count()
-    // L1 rows are present for every frequent item (anti-monotonicity)
-    val itemSupport: Map[String, Double] = rows
-      .filter(!_._1.contains(","))
-      .map { case (i, f) => i -> f.toDouble / n }.toMap
-    val asItems = rows.toSeq
-      .map { case (k, f) => (k.split(",").toSeq, f) }.toDF("items", "freq")
-    AssociationRules.fromFreqItemsets(asItems, itemSupport, n, MinConfidence)
+  def rulesFromRefreshedArtifact(spark: SparkSession, dir: String): DataFrame =
+    AssociationRules.toFrame(spark, refreshedArtifactRules(spark, dir, "q187"))
       .where(size(col("antecedent")) <= 2)
       .select(
         array_join(array_sort(col("antecedent")), ",").as("antecedent"),
         col("consequent").getItem(0).as("consequent"),
         col("confidence"), col("lift"), col("support"))
+
+  /** The rules of the q170-refreshed itemset artifact, derived on the
+    * driver from ONE evaluation of the refresh plan: the artifact is
+    * support-bounded, so it collects whole, and its arity-1 rows are the
+    * item supports (present for every frequent item by
+    * anti-monotonicity). */
+  private def refreshedArtifactRules(
+      spark: SparkSession, dir: String, tag: String): Array[AssociationRules.Rule] = {
+    val rows: Array[(String, Long)] = itemsetRefreshIn(spark, dir, tag)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val n = Tables.orderBrandBaskets(spark, dir).count()
+    val itemSupport: Map[String, Double] = rows
+      .filter(!_._1.contains(","))
+      .map { case (i, f) => i -> f.toDouble / n }.toMap
+    AssociationRules.derive(rows.map { case (k, f) => (k.split(",").toSeq, f) },
+      itemSupport, n, MinConfidence)
   }
 
   /** q04's statement verbatim: refresh-then-derive must equal
@@ -395,23 +397,8 @@ object FpmQueries {
    */
   def predictFromRefreshedArtifact(
       spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // ONE evaluation of the refresh plan (the q187 bounded-collect
-    // idiom: the artifact is support-bounded metadata).
-    val rows: Array[(String, Long)] = itemsetRefreshIn(spark, dir, "q198")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val n = Tables.orderBrandBaskets(spark, dir).count()
-    val itemSupport: Map[String, Double] = rows
-      .filter(!_._1.contains(","))
-      .map { case (i, f) => i -> f.toDouble / n }.toMap
-    val asItems = rows.toSeq
-      .map { case (k, f) => (k.split(",").toSeq, f) }.toDF("items", "freq")
-    val rules = AssociationRules
-      .fromFreqItemsets(asItems, itemSupport, n, MinConfidence)
-      .where(size(col("antecedent")) <= 2)
-      .select(col("antecedent"), col("consequent").getItem(0), col("lift"))
-      .as[(Array[String], String, Double)]
-      .collect()
+    val rules = refreshedArtifactRules(spark, dir, "q198")
+      .collect { case r if r.antecedent.length <= 2 => (r.antecedent, r.consequent, r.lift) }
     Predictor.predict(
       Tables.orderBrandBaskets(spark, dir),
       Predictor.sortRules(rules), "items", "prediction")

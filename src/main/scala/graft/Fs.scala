@@ -149,16 +149,21 @@ object Fs {
     * always consults the committed counter first). Non-`e<digits>`
     * entries are left alone. */
   def sweepBelowEpoch(dir: Path, epoch: Long): Unit =
-    if (Files.exists(dir)) {
+    numbered(dir, "e").collect { case (k, p) if k < epoch => p }
+      .foreach(deleteRecursively)
+
+  /** The `<prefix><digits>` entries of `dir` with their numbers (none
+    * when `dir` is absent); other entries are left out. */
+  def numbered(dir: Path, prefix: String): Seq[(Long, Path)] =
+    if (!Files.exists(dir)) Nil
+    else {
       val stream = Files.list(dir)
-      val stale = try {
-        val b = Seq.newBuilder[Path]
-        stream.filter(p =>
-            numericSuffix(p.getFileName.toString, "e").exists(_ < epoch))
-          .forEach(p => b += p)
+      try {
+        val b = Seq.newBuilder[(Long, Path)]
+        stream.forEach(p =>
+          numericSuffix(p.getFileName.toString, prefix).foreach(k => b += ((k, p))))
         b.result()
       } finally stream.close()
-      stale.foreach(deleteRecursively)
     }
 
   /** Repair crash residue before a swap decision. Case analysis over

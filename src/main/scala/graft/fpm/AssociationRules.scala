@@ -1,23 +1,32 @@
 package graft.fpm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable
 
 /**
  * Association-rule generation from frequent itemsets — single-item
  * consequents, like the reference
  * (`/root/reference/src/main/java/fdu/cst/bigdata/pfp/AssociationRules.scala:60-82`).
  *
- * Where the reference drops to an RDD flatMap + shuffled RDD join keyed by
- * `Seq[Item]`, this is pure DataFrame algebra, so Catalyst plans it:
- *  - candidate generation = `explode(items)` as the consequent +
- *    `array_remove` as the antecedent (no custom generator needed);
- *  - the antecedent-frequency lookup = an equi-join back onto the itemset
- *    table on an `array_sort`-canonicalized array key (SURVEY.md J1: array
- *    join keys must be canonicalized; itemsets arrive in rank order but the
- *    sorted key makes the join order-insensitive by construction);
- *  - the consequent-support lookup for lift = a broadcast join against the
- *    (tiny, minSupport-bounded) L1 item-support table.
+ * Rule derivation is count algebra over the itemset table, which
+ * minSupport bounds: [[collectRules]] collects it once and [[derive]]
+ * runs on the driver — every itemset of arity >= 2 yields one candidate
+ * per item as the consequent, its antecedent count is one hash lookup on
+ * the canonical (sorted) antecedent key, and the consequent support comes
+ * from the L1 table. That is the same bound `transform` relies on when it
+ * collects and broadcasts the whole rule table.
+ *
+ * Why not a distributed explode + join plan: it costs three Spark jobs
+ * per derivation, and a memoized frame over it keeps its executed plan
+ * alive, with the driver-side broadcast hash relations of its joins.
+ * Their Tungsten pages are sized by heap / cores, not by the table (two
+ * ~16 MiB pages for a 900-item, 12k-itemset table at a 2 GiB heap and 4
+ * cores), so every live model would pin them. The model memoizes the
+ * rules as plain rows instead, and [[toFrame]] serves them as a
+ * `LocalRelation`, which runs no job and holds no broadcast.
  *
  * Output schema matches `pfp/FPGrowth.scala:212-219`:
  * `antecedent array, consequent array, confidence double, lift double,
@@ -25,38 +34,70 @@ import org.apache.spark.sql.functions._
  */
 object AssociationRules {
 
-  def fromFreqItemsets(
-      freqItemsets: DataFrame,
-      itemSupport: Map[String, Double],
+  /** One rule `antecedent => consequent`; the antecedent keeps the
+    * itemset's item order. */
+  final case class Rule(
+      antecedent: Array[String],
+      consequent: String,
+      confidence: Double,
+      lift: Double,
+      support: Double)
+
+  /** The rule frame's columns. */
+  val Schema: StructType = StructType(Seq(
+    StructField("antecedent", ArrayType(StringType)),
+    StructField("consequent", ArrayType(StringType), nullable = false),
+    StructField("confidence", DoubleType),
+    StructField("lift", DoubleType),
+    StructField("support", DoubleType)))
+
+  private val nullsFirst: Ordering[String] = Ordering.by(Option(_: String))
+
+  /**
+   * Rules over `(items, freq)` itemset rows, linear in itemsets x arity.
+   * The doubles are direct count divisions in a pinned order —
+   * `confidence = fu / fa`, `lift = confidence / support(consequent)`,
+   * `support = fu / n` — so a DuckDB oracle dividing the same counts
+   * matches them bit for bit. A candidate whose antecedent is not an
+   * itemset, or whose consequent is null or has no support, is dropped.
+   */
+  def derive(
+      itemsets: Iterable[(collection.Seq[String], Long)],
+      itemSupport: collection.Map[String, Double],
       numTransactions: Long,
-      minConfidence: Double): DataFrame = {
-    val spark = freqItemsets.sparkSession
-    import spark.implicits._
-
-    val supportDF = broadcast(
-      itemSupport.toSeq.toDF("c_item", "c_support"))
-
-    val antecedentFreq = freqItemsets
-      .select(array_sort(col("items")).as("ant_key"), col("freq").as("freq_antecedent"))
-
-    freqItemsets
-      .where(size(col("items")) > 1)
-      .select(col("freq").as("freq_union"), explode(col("items")).as("cons_item"), col("items"))
-      .select(
-        array_remove(col("items"), col("cons_item")).as("antecedent"),
-        col("cons_item"),
-        col("freq_union"))
-      .join(antecedentFreq, array_sort(col("antecedent")) === col("ant_key"))
-      .join(supportDF, col("cons_item") === col("c_item"))
-      .select(
-        col("antecedent"),
-        array(col("cons_item")).as("consequent"),
-        (col("freq_union").cast("double") / col("freq_antecedent")).as("confidence"),
-        ((col("freq_union").cast("double") / col("freq_antecedent")) / col("c_support"))
-          .as("lift"),
-        (col("freq_union").cast("double") / lit(numTransactions.toDouble)).as("support"))
-      .where(col("confidence") >= minConfidence)
+      minConfidence: Double): Array[Rule] = {
+    val keyed = itemsets.map { case (items, freq) => (items, items.sorted(nullsFirst).toSeq, freq) }
+    val freqOf = mutable.HashMap.empty[Seq[String], Long]
+    keyed.foreach { case (_, key, freq) => freqOf(key) = freq }
+    val out = Array.newBuilder[Rule]
+    for ((items, key, fu) <- keyed if items.length > 1; cons <- items if cons != null) {
+      for (fa <- freqOf.get(key.filterNot(_ == cons)); cSupport <- itemSupport.get(cons)) {
+        val confidence = fu.toDouble / fa
+        if (confidence >= minConfidence)
+          out += Rule(items.filterNot(_ == cons).toArray, cons, confidence,
+            confidence / cSupport, fu.toDouble / numTransactions.toDouble)
+      }
+    }
+    out.result()
   }
+
+  /** [[derive]] over one collect of `freqItemsets`. */
+  def collectRules(
+      freqItemsets: DataFrame,
+      itemSupport: collection.Map[String, Double],
+      numTransactions: Long,
+      minConfidence: Double): Array[Rule] = {
+    val rows = freqItemsets.select(col("items"), col("freq")).collect()
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getSeq[String](0), r.getLong(1)))
+    derive(rows, itemSupport, numTransactions, minConfidence)
+  }
+
+  /** `rules` as a driver-local frame with the [[Schema]] columns. */
+  def toFrame(spark: SparkSession, rules: Array[Rule]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rules.map(r =>
+      Row(r.antecedent.toSeq, Seq(r.consequent), r.confidence, r.lift, r.support)): _*),
+      Schema)
 
   /**
    * Rule interestingness BEYOND confidence/lift — the measures real
@@ -83,7 +124,7 @@ object AssociationRules {
    * Derivation is pure count algebra on the frequent-itemset table
    * itself: consequent counts come from its arity-1 rows (present for
    * every frequent item by anti-monotonicity), broadcast-joined. The
-   * confidence/lift/support columns replicate [[fromFreqItemsets]]'s
+   * confidence/lift/support columns replicate [[derive]]'s
    * exact double formulas, so the shared columns agree with q04
    * bit for bit (q04's schema itself is untouched).
    *

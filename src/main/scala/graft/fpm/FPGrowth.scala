@@ -3,6 +3,7 @@ package graft.fpm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -22,8 +23,10 @@ import scala.collection.mutable
  *
  * Pipeline:
  *  1. L1 pass: `explode -> groupBy(item).count -> HAVING count >= minCount`
- *     (map-side partial agg for free) -> `orderBy(freq desc, item)` ->
- *     collect the (small, <= #distinct frequent items) ranked dictionary.
+ *     (map-side partial agg for free) -> collect the (small, <= #distinct
+ *     frequent items) list and rank it on the driver by (freq desc, item
+ *     asc) in Spark's string order ([[FPGrowth.rankOrder]]): a distributed
+ *     `orderBy` would add a range-sampling job and an exchange.
  *  2. Broadcast rank dictionary + rank->group map ([[ItemGroups]]).
  *  3. Conditional transactions: typed flatMap emitting per transaction at
  *     most one (groupId, rank-prefix) per distinct group — the PFP shuffle
@@ -92,14 +95,13 @@ class FPGrowth private (
         if (minCountOverride >= 1L) minCountOverride
         else math.max(1L, math.ceil(minSupport * numTransactions).toLong)
 
-      // L1: ranked frequent items. Deterministic rank order (freq desc, item asc).
-      val freqItems: Array[(String, Long)] = input
+      // L1: frequent items, ranked on the driver (pipeline step 1)
+      val freqItems: Array[(String, Long)] = FPGrowth.rankOrder(input
         .select(explode(col(itemsCol)).as("item"))
         .groupBy($"item").agg(count(lit(1)).as("freq"))
         .where($"freq" >= minCount)
-        .orderBy($"freq".desc, $"item".asc)
         .as[(String, Long)]
-        .collect()
+        .collect())
 
       val numParts =
         if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
@@ -147,6 +149,19 @@ class FPGrowth private (
 }
 
 object FPGrowth {
+
+  /**
+   * The deterministic rank order of the L1 list, exactly what
+   * `orderBy(freq.desc, item.asc)` gives: freq desc, then item ascending
+   * in Spark's string order — UTF-8 byte order, nulls first. That is not
+   * `String.compareTo`'s UTF-16 order, which puts a supplementary-plane
+   * character (a surrogate pair) before U+E000..U+FFFF.
+   */
+  private[fpm] def rankOrder(freqItems: Array[(String, Long)]): Array[(String, Long)] = {
+    val utf8Order: Ordering[UTF8String] = (a, b) => a.binaryCompare(b)
+    freqItems.sortBy { case (item, freq) => (-freq, Option(item).map(UTF8String.fromString)) }(
+      Ordering.Tuple2(Ordering.Long, Ordering.Option(utf8Order)))
+  }
 
   /**
    * Per-transaction conditional transactions: filter to frequent items, map
@@ -238,28 +253,20 @@ class FPGrowthModel private[fpm] (
     minConfidence = v; this
   }
 
-  @transient private lazy val rulesCache = mutable.Map.empty[Double, DataFrame]
+  @transient private lazy val rulesCache =
+    mutable.Map.empty[Double, Array[AssociationRules.Rule]]
 
-  /** Association rules X => y at the current minConfidence, memoized. */
-  def associationRules: DataFrame = rulesCache.synchronized {
+  /** The rules at the current minConfidence, derived once per confidence. */
+  private def rules: Array[AssociationRules.Rule] = rulesCache.synchronized {
     rulesCache.getOrElseUpdate(minConfidence,
-      AssociationRules.fromFreqItemsets(
+      AssociationRules.collectRules(
         freqItemsets, itemSupport, numTransactions, minConfidence))
   }
 
-  /**
-   * Rules sorted (lift desc, consequent asc) — the deterministic refinement
-   * of the reference's lift-desc sort (`pfp/FPGrowth.scala:171-172`).
-   */
-  private def collectRules(): Array[(Array[String], String, Double)] = {
-    val spark = freqItemsets.sparkSession
-    import spark.implicits._
-    associationRules
-      .select(col("antecedent"), col("consequent").getItem(0), col("lift"))
-      .as[(Array[String], String, Double)]
-      .collect()
-      .sortBy { case (_, cons, lift) => (-lift, cons) }
-  }
+  /** Association rules X => y at the current minConfidence: a driver-local
+    * frame over the memoized rules, so reading it runs no Spark job. */
+  def associationRules: DataFrame =
+    AssociationRules.toFrame(freqItemsets.sparkSession, rules)
 
   /**
    * Adds `predictionCol`: consequents of all matching rules (antecedent a
@@ -267,12 +274,14 @@ class FPGrowthModel private[fpm] (
    * lift desc, deduped, joined with ", " — a StringType column, matching
    * `pfp/FPGrowth.scala:168-177`. Null items propagate null.
    *
-   * The rule table is collected and broadcast (it is minSupport-bounded and
+   * The memoized rule table is broadcast (it is minSupport-bounded and
    * small); the probe is a subset test per row — the same broadcast-join
    * shape the reference hand-rolls (`pfp/FPGrowth.scala:151-155`).
    */
   def transform(dataset: Dataset[_]): DataFrame =
-    Predictor.predict(dataset.toDF(), collectRules(), itemsCol, predictionCol)
+    Predictor.predict(dataset.toDF(),
+      Predictor.sortRules(rules.map(r => (r.antecedent, r.consequent, r.lift))),
+      itemsCol, predictionCol)
 
   /**
    * pfp-only variant (`pfp/FPGrowth.scala:124-148`): predict over the

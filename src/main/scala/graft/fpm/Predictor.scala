@@ -117,6 +117,9 @@ object Predictor {
     data.withColumn(predictionCol, predictUDF(col(itemsCol)))
   }
 
+  /** Rules sorted (lift desc, consequent asc) — the deterministic
+    * refinement of the reference's lift-desc sort
+    * (`pfp/FPGrowth.scala:171-172`) that [[predict]] expects. */
   def sortRules(
       rules: Array[(Array[String], String, Double)]): Array[(Array[String], String, Double)] =
     rules.sortBy { case (_, cons, lift) => (-lift, cons) }

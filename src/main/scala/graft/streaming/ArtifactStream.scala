@@ -171,7 +171,11 @@ object ArtifactStream {
       else {
         val promoted = corpus.resolve(s"e${epoch + 1L}")
         Fs.deleteRecursively(promoted) // pre-swap crash residue
-        epochBase().unionByName(spark.read.parquet(s"$ingested/e$epoch/b*"))
+        // the epoch's ingest record: the b<id> dirs this step wrote, read
+        // as explicit paths (a glob path makes Spark probe it as a
+        // literal sink-metadata dir and log a FileNotFoundException)
+        val batches = Fs.numbered(ingested.resolve(s"e$epoch"), "b").map(_._2.toString)
+        epochBase().unionByName(spark.read.parquet(batches: _*))
           .write.parquet(promoted.toString)
         Some(family.remine(spark.read.parquet(promoted.toString)))
       }

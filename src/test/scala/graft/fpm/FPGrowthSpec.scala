@@ -1,7 +1,8 @@
 package graft.fpm
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.functions.{explode, spark_partition_id}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -160,6 +161,58 @@ class FPGrowthSpec extends AnyFunSuite {
     val probe = Seq(Seq("I1"), Seq("I5", "I2", "I3")).toDF("items")
     assert(loaded.transform(probe).collect().map(_.toString).toSeq ==
       model.transform(probe).collect().map(_.toString).toSeq)
+  }
+
+  test("item ranks follow Spark's string order: orderBy(freq desc, item asc)") {
+    import spark.implicits._
+    // equal-support items on both sides of the UTF-16 / UTF-8 order
+    // boundary: String.compareTo puts the surrogate pairs first
+    val straddle = Seq("\uE000", "\uFFFD", "\uD800\uDC00", "\uD83D\uDE00")
+    assert(straddle.sorted != straddle)
+    val df = (Seq.fill(3)(straddle :+ "a") ++ Seq.fill(2)(Seq("a")) :+ straddle).toDF("items")
+    val expected = df.select(explode($"items").as("item")).groupBy($"item").count()
+      .orderBy($"count".desc, $"item".asc).as[(String, Long)].collect().map(_._1).toSeq
+    assert(expected == "a" +: straddle)
+    // an itemset lists its items in ascending rank
+    val model = new FPGrowth().setMinSupport(0.5).fit(df)
+    val widest = model.freqItemsets.as[(Seq[String], Long)].collect().map(_._1).maxBy(_.length)
+    assert(widest == expected)
+  }
+
+  test("rules are derived once per model: a rule read or a transform runs at most one job") {
+    import spark.implicits._
+    val model = new FPGrowth().setMinSupport(0.4).setMinConfidence(0.6).fit(trainDF)
+    val probe = Seq(Seq("I1"), Seq("I5", "I2", "I3")).toDF("items")
+    val sc = spark.sparkContext
+    val group = "rules-derived-once"
+    // jobs of this thread's group only: other suites may share the context
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    // LiveListenerBus is private[spark] to Scala but public in bytecode
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val rules = model.associationRules
+      assert(jobsOf(rules.collect()) <= 1)
+      assert(jobsOf(model.transform(probe).write.format("noop").mode("overwrite").save()) <= 1)
+      assert(jobsOf(model.associationRules.collect()) == 0)
+      assert(!rules.queryExecution.executedPlan.toString.contains("Broadcast"),
+        rules.queryExecution.executedPlan)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("duplicate items in a transaction are rejected") {

@@ -6,6 +6,8 @@ Assumes `sbt "runMain graft.Verify <sfdir> <outdir>"` has already run.
 Compares each <outdir>/<name>/*.parquet against its DuckDB oracle from
 <outdir>/oracle_sql.json: columns sorted by name, rows sorted, exact value
 compare (floats compared by bits via equality after round-trip).
+Writes the names of the failing rows, one a line, to
+<outdir>/check_failures.txt (empty when every row passes).
 """
 import duckdb, pandas as pd, json, sys
 
@@ -19,7 +21,7 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f'{out}/oracle_sql.json'))
-    fails = 0
+    failed = []
     for name in sorted(oracle):
         try:
             exp = con.execute(oracle[name]).df()
@@ -28,25 +30,27 @@ def main():
             exp, got = exp[sorted(exp.columns)], got[sorted(got.columns)]
             if [str(c) for c in exp.columns] != [str(c) for c in got.columns]:
                 print(f'{name}: SCHEMA expected {list(exp.columns)} got {list(got.columns)}')
-                fails += 1; continue
+                failed.append(name); continue
             cols = list(exp.columns)
             exp = exp.sort_values(by=cols, ignore_index=True)
             got = got.sort_values(by=cols, ignore_index=True)
             if len(exp) != len(got):
                 print(f'{name}: ROWS expected {len(exp)} got {len(got)}')
-                fails += 1; continue
+                failed.append(name); continue
             if not exp.equals(got):
                 diff = (exp != got) & ~(exp.isna() & got.isna())
                 bad = diff.any(axis=1)
                 print(f'{name}: VALUES {int(diff.values.sum())} cells differ; first rows:')
                 print(pd.concat([exp[bad].head(2).assign(side='oracle'),
                                  got[bad].head(2).assign(side='spark')]).to_string())
-                fails += 1; continue
+                failed.append(name); continue
             print(f'{name}: OK ({len(exp)} rows)')
         except Exception as e:
             print(f'{name}: ERROR {type(e).__name__}: {e}')
-            fails += 1
-    sys.exit(1 if fails else 0)
+            failed.append(name)
+    with open(f'{out}/check_failures.txt', 'w') as f:
+        f.write(''.join(n + '\n' for n in failed))
+    sys.exit(1 if failed else 0)
 
 if __name__ == '__main__':
     main()
