@@ -301,8 +301,7 @@ object FpmQueries {
     val minCountUni =
       math.max(1L, math.ceil(MinSupport * (nOld + nAdded)).toLong)
     val probe = math.max(1L, minCountUni - nAdded)
-    val staged = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", s"graft-$tag-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val staged = graft.Fs.stagedFor(tag, dir)
     val artPath = staged.resolve("itemsets").toString
     minedItemsets(spark, dir, "old211", old, probe)
       .write.mode("overwrite").parquet(artPath)
@@ -459,8 +458,7 @@ object FpmQueries {
     val minCountUni =
       math.max(1L, math.ceil(MinSupport * (nOld + nAdded)).toLong)
     val probe = math.max(1L, minCountUni - nAdded)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q188-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q188", dir)
     val artDir = base.resolve("itemsets")
     minedItemsets(spark, dir, "old211", old, probe)
       .write.parquet(artDir.toString)
@@ -547,8 +545,7 @@ object FpmQueries {
     // so a 60% trigger MUST fire mid-stream across four quarter batches
     val headroom = math.max(1L, nAdded)
     val probe = math.max(1L, minCountUni - headroom)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q199-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q199", dir)
     val artDir = base.resolve("itemsets")
     minedItemsets(spark, dir, "old211", old, probe)
       .write.parquet(artDir.toString)
@@ -604,8 +601,7 @@ object FpmQueries {
     val minCountNew = math.max(1L,
       math.ceil(MinSupport * (nOld - nRemoved + nAdded)).toLong)
     val probe = math.max(1L, minCountNew - nAdded)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q194-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q194", dir)
     val artDir = base.resolve("itemsets")
     minedItemsets(spark, dir, "old211", old, probe)
       .write.parquet(artDir.toString)
@@ -671,8 +667,7 @@ object FpmQueries {
     val minCountNew = math.max(1L,
       math.ceil(MinSupport * (nOld - nRemoved + nAdded)).toLong)
     val probe = math.max(1L, minCountNew - nAdded)
-    val staged = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q193-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val staged = graft.Fs.stagedFor("q193", dir)
     val artPath = staged.resolve("itemsets").toString
     minedItemsets(spark, dir, "old211", old, probe)
       .write.mode("overwrite").parquet(artPath)

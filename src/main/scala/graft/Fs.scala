@@ -25,6 +25,13 @@ object Fs {
     dir
   }
 
+  /** [[staged]] under the one naming rule for a query's per-corpus
+    * staging dir: `/tmp/graft-<tag>-<corpus dir>`, with every character
+    * of the corpus dir outside `[A-Za-z0-9.]` mapped to `_`. */
+  def stagedFor(tag: String, corpusDir: String): Path =
+    staged(java.nio.file.Paths.get(
+      "/tmp", s"graft-$tag-" + corpusDir.replaceAll("[^A-Za-z0-9.]", "_")))
+
   /** Delete every dir registered via [[staged]] since the last sweep —
     * called from [[Caches.clearAll]]; always safe (the next invocation
     * re-stages from scratch). */

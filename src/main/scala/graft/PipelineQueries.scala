@@ -560,8 +560,7 @@ object PipelineQueries {
         // grouped agg below then emits zero rows (the oracle's HAVING)
         Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       } else {
-        val idx = graft.Fs.staged(java.nio.file.Paths.get(
-          "/tmp", "graft-q86-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+        val idx = graft.Fs.stagedFor("q86", d)
         Similarity.savePqCodebook(s, trained, s"$idx/pq")
         // the ONE raw-vector pass: materialize the (id, code) artifact
         Similarity.saveEncodedCorpus(
@@ -629,8 +628,7 @@ object PipelineQueries {
         // grouped agg emits zero rows (the oracle's HAVING)
         Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       } else {
-        val idx = graft.Fs.staged(java.nio.file.Paths.get(
-          "/tmp", "graft-q87-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+        val idx = graft.Fs.stagedFor("q87", d)
         Similarity.saveIvfIndex(s, cents, s"$idx/ivf")
         Similarity.savePqCodebook(s, cb, s"$idx/pq")
         // the ONE raw-vector pass: materialize the inverted file
@@ -701,8 +699,7 @@ object PipelineQueries {
         // grouped agg emits zero rows (the oracle's HAVING)
         Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       } else {
-        val idx = graft.Fs.staged(java.nio.file.Paths.get(
-          "/tmp", "graft-q90-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+        val idx = graft.Fs.stagedFor("q90", d)
         Similarity.saveIvfIndex(s, cents, s"$idx/ivf")
         Similarity.savePqCodebook(s, cb, s"$idx/pq")
         // base build: one raw-vector pass over the (simulated) existing
@@ -770,8 +767,7 @@ object PipelineQueries {
         // (empty) schema instead of throwing
         Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       } else {
-        val idx = graft.Fs.staged(java.nio.file.Paths.get(
-          "/tmp", "graft-q93-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+        val idx = graft.Fs.stagedFor("q93", d)
         Similarity.saveIvfIndex(s, cents, s"$idx/ivf")
         Similarity.saveEncodedCorpus(
           Similarity.ivfAssign(e, "vec_id", "embedding", cents), s"$idx/list")
@@ -826,8 +822,7 @@ object PipelineQueries {
   private def streamedDedupFingerprints(
       s: SparkSession, d: String, tag: String,
       key: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", s"graft-$tag-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor(tag, d)
     val out = base.resolve("out")
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     // arrival is (doc_id + 1) seconds, so a horizon of span + 2 seconds
@@ -897,8 +892,7 @@ object PipelineQueries {
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
     val words = Bloom.fromBytes(bloomRow.getAs[Array[Byte]](0))
 
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q97-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q97", d)
     val out = base.resolve("out")
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     val train = s.readStream.schema(schema)
@@ -961,8 +955,7 @@ object PipelineQueries {
    */
   def nearDupGateStreamed(s: SparkSession, d: String): DataFrame = {
     val dd = docs(s, d)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q98-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q98", d)
     // The reference index is a PERSISTED DISTRIBUTED artifact — the
     // distinct (band, bucket) table, never a driver-side collect (at a
     // 100 TB reference corpus the set is multi-TB; the artifact stays
@@ -1030,8 +1023,7 @@ object PipelineQueries {
    */
   def mediaGateStreamed(s: SparkSession, d: String): DataFrame = {
     val media = Multimodal.documentBlobs(s, d)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q113-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q113", d)
     // Reference fingerprints persisted as the DISTRIBUTED band-index
     // artifact — one (band, key, phash) row per fingerprint per band,
     // never a driver-side collect of the reference corpus.
@@ -2276,8 +2268,7 @@ object PipelineQueries {
     * exact-replayed by the oracle, the q169 full-hash-check class. */
   def lmGateStreamed(s: SparkSession, d: String): DataFrame = {
     val dd = docs(s, d)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q176-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q176", d)
     val lmPath = base.resolve("lm").toString
     Signals.saveLmArtifact(dd, "text", minCount = 5L, lmPath)
     val artifact = Signals.loadLmArtifact(s, lmPath)
@@ -2601,8 +2592,7 @@ object PipelineQueries {
     * delta == full proof at full strength. */
   def boilerplateStripRefresh(s: SparkSession, d: String): DataFrame = {
     val dd = docs(s, d)
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q163-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q163", d)
     Curation.saveChunkCounts(
       Curation.chunkCounts(dd.where(col("doc_id") % 2 === 0),
         "doc_id", "text", chunk = 3),
@@ -2719,8 +2709,7 @@ object PipelineQueries {
     * doc. */
   def boilerplateGateStreamed(s: SparkSession, d: String): DataFrame = {
     val dd = docs(s, d)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q169-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q169", d)
     val cntPath = base.resolve("chunk_counts").toString
     Curation.saveChunkCounts(
       Curation.chunkCounts(dd, "doc_id", "text", chunk = 3), cntPath)
@@ -3092,8 +3081,7 @@ object PipelineQueries {
         // schema; the vote below then emits zero rows
         Similarity.bruteForceTopK(e, e, "vec_id", "embedding", k = 5)
       } else {
-        val idx = graft.Fs.staged(java.nio.file.Paths.get(
-          "/tmp", "graft-q108-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+        val idx = graft.Fs.stagedFor("q108", d)
         Similarity.saveIvfIndex(s, cents, s"$idx/ivf")
         Similarity.saveEncodedCorpus(
           Similarity.ivfAssign(e, "vec_id", "embedding", cents), s"$idx/list")
@@ -3222,8 +3210,7 @@ object PipelineQueries {
       return s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
     val cb = cbTrained
-    val idx = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q104-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val idx = graft.Fs.stagedFor("q104", d)
     Similarity.saveIvfIndex(s, cents, s"$idx/ivf")
     Similarity.savePqCodebook(s, cb, s"$idx/pq")
     Similarity.saveEncodedCorpus(
@@ -3277,8 +3264,7 @@ object PipelineQueries {
     val (staleCents, staleCb) =
       Similarity.trainIvfPqResidual(indexed, "vec_id", "embedding")
     if (staleCents.isEmpty) return empty()
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q152-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q152", d)
     def buildAndProbe(
         corpus: DataFrame, cents: Array[Array[Double]],
         cb: Array[Array[Array[Double]]], tag: String): DataFrame = {
@@ -3793,8 +3779,7 @@ object PipelineQueries {
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" rev2")))
           .otherwise(col("text")))
     val sk = graft.pipeline.Sketches
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q174-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q174", d)
     sk.saveRegisters(
       sk.kmvSketch(sk.ngramStream(old, "text", Seq("source"), n = 2),
         Seq("source"), "gram"),
@@ -3863,8 +3848,7 @@ object PipelineQueries {
     * proves stream == batch. */
   def kmvStreamMaintained(s: SparkSession, d: String): DataFrame = {
     val sk = graft.pipeline.Sketches
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q177-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q177", d)
     val in = base.resolve("in").toString
     val dd = docs(s, d).where(col("text").isNotNull)
     dd.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(in)
@@ -3920,8 +3904,7 @@ object PipelineQueries {
     * a higher priority must evict a first-file row or ranks would not
     * match). */
   def prioritySampleStreamMaintained(s: SparkSession, d: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q180-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q180", d)
     val in = base.resolve("in").toString
     val dd = docs(s, d)
     dd.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(in)
@@ -4017,8 +4000,7 @@ object PipelineQueries {
     def words(df: DataFrame) = df.select(
       explode(filter(split(lower(col("text")), " "), w => w =!= "")).as("word"))
     val sk = graft.pipeline.Sketches
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q157-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q157", d)
     sk.saveRegisters(sk.cmsCounters(words(old), "word"),
       dir.resolve("counters").toString)
     sk.mergeCounters(
@@ -4110,8 +4092,7 @@ object PipelineQueries {
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" rev2")))
           .otherwise(col("text")))
     val sk = graft.pipeline.Sketches
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q129-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q129", d)
     sk.saveRegisters(
       sk.hllRegisters(sk.ngramStream(old, "text", Seq("source")),
         Seq("source"), "gram"),
@@ -4195,8 +4176,7 @@ object PipelineQueries {
     * (not just the bootstrap write) is exercised under the driver. */
   def hllStreamMaintained(s: SparkSession, d: String): DataFrame = {
     val sk = graft.pipeline.Sketches
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q135-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q135", d)
     val in = base.resolve("in").toString
     val dd = docs(s, d).where(col("text").isNotNull)
     dd.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(in)
@@ -4248,8 +4228,7 @@ object PipelineQueries {
     * whole corpus in one pass and the hash match says exactly that. */
   def qsketchStreamMaintained(s: SparkSession, d: String): DataFrame = {
     val sk = graft.pipeline.Sketches
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q154-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q154", d)
     val in = base.resolve("in").toString
     val dd = docs(s, d).where(col("text").isNotNull)
     dd.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(in)
@@ -4631,8 +4610,7 @@ object PipelineQueries {
     * second-file doc with a smaller key must displace a first-file
     * rank-k row or the ranks would not match). */
   def sampleStreamMaintained(s: SparkSession, d: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q151-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q151", d)
     val in = base.resolve("in").toString
     val dd = docs(s, d)
     dd.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(in)
@@ -4862,8 +4840,7 @@ object PipelineQueries {
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" rev2")))
           .otherwise(col("text")))
     val uni = old.unionByName(added)
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q150-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q150", d)
     val artPath = dir.resolve("clusters").toString
     val idxPath = dir.resolve("shingles").toString
     // artifact build: clusters + the shingle index that produced them
@@ -4919,8 +4896,7 @@ object PipelineQueries {
     def lens(df: DataFrame) =
       df.select(col("source"), length(col("text")).cast("long").as("len"))
     val sk = graft.pipeline.Sketches
-    val dir = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q148-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+    val dir = graft.Fs.stagedFor("q148", d)
     sk.saveRegisters(sk.qsketchBuckets(lens(old), Seq("source"), "len"),
       dir.resolve("qsketch").toString)
     val loaded = sk.loadRegisters(s, dir.resolve("qsketch").toString)

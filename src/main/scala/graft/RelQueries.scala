@@ -502,8 +502,7 @@ object RelQueries {
    * re-runs).
    */
   def eventAttributionStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q84-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q84", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.attributionStream(spark, dir)
@@ -551,8 +550,7 @@ object RelQueries {
    * discipline).
    */
   def eventSessionsStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q91-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q91", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.sessionsClosedStream(spark, dir)
@@ -616,8 +614,7 @@ object RelQueries {
    * restricted to sessions the final watermark closed.
    */
   def sessionWindowStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q160-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q160", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.sessionWindowStream(spark, dir)
@@ -671,8 +668,7 @@ object RelQueries {
    * temp-dir discipline as q84/q91.
    */
   def eventHourlyStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q92-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q92", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.hourlyStream(spark, dir)
@@ -719,8 +715,7 @@ object RelQueries {
    * per-hour-latency-quantiles shape an SLO monitor runs forever.
    */
   def windowedQsketchStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q159-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q159", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.hourlyQsketchStream(spark, dir)
@@ -793,8 +788,7 @@ object RelQueries {
    * q92 with a 30-minute window length. Same temp-dir discipline.
    */
   def eventHoppingStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q94-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q94", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.hoppingStream(spark, dir)
@@ -841,8 +835,7 @@ object RelQueries {
    * temp-dir discipline as q84/q91/q92/q94.
    */
   def signupFollowupsStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q95-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q95", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.followupsStream(spark, dir)
@@ -1346,8 +1339,7 @@ object RelQueries {
       splitUserCounts(ev, col("user_id") % 17 === 0)
     val minCountUni = ((nOld + nAdded) * 4L + 4L) / 5L
     val probe = math.max(1L, minCountUni - nAdded)
-    val staged = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", s"graft-$tag-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val staged = graft.Fs.stagedFor(tag, dir)
     val artPath = staged.resolve("seqpatterns").toString
     minedSequences(spark, dir, "old17", old, probe, math.max(1L, nOld))
       .write.parquet(artPath)
@@ -1387,8 +1379,7 @@ object RelQueries {
     val (nTouched, nOldUsers, nUsers) = splitUserCounts(ev, isDelta)
     val minCountUni = (nUsers * 4L + 4L) / 5L
     val probe = math.max(1L, minCountUni - nTouched)
-    val staged = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q192-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val staged = graft.Fs.stagedFor("q192", dir)
     val artPath = staged.resolve("seqpatterns").toString
     minedSequences(spark, dir, "oldtouch", old, probe,
         math.max(1L, nOldUsers))
@@ -1430,8 +1421,7 @@ object RelQueries {
     val (nTouched, nOldUsers, nUsers) = splitUserCounts(ev, isDelta)
     val minCountUni = (nUsers * 4L + 4L) / 5L
     val probe = math.max(1L, minCountUni - nTouched)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q196-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q196", dir)
     val artDir = base.resolve("seqpatterns")
     minedSequences(spark, dir, "oldtouch", old, probe,
         math.max(1L, nOldUsers))
@@ -1515,8 +1505,7 @@ object RelQueries {
     val (_, nKept, nAll) =
       splitUserCounts(ev, col("user_id") % 17 === 0)
     val minCountNew = (nKept * 4L + 4L) / 5L
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q197-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q197", dir)
     val artDir = base.resolve("seqpatterns")
     minedSequences(spark, dir, "full", ev, minCountNew,
         math.max(1L, nAll))
@@ -1562,8 +1551,7 @@ object RelQueries {
     val (_, nKept, nAll) =
       splitUserCounts(ev, col("user_id") % 17 === 0)
     val minCountNew = (nKept * 4L + 4L) / 5L
-    val staged = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q195-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val staged = graft.Fs.stagedFor("q195", dir)
     val artPath = staged.resolve("seqpatterns").toString
     minedSequences(spark, dir, "full", ev, minCountNew,
         math.max(1L, nAll))
@@ -1628,8 +1616,7 @@ object RelQueries {
       splitUserCounts(ev, col("user_id") % 17 === 0)
     val minCountUni = ((nOld + nAdded) * 4L + 4L) / 5L
     val probe = math.max(1L, minCountUni - nAdded)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q190-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q190", dir)
     val artDir = base.resolve("seqpatterns")
     minedSequences(spark, dir, "old17", old, probe, math.max(1L, nOld))
       .write.parquet(artDir.toString)
@@ -1693,8 +1680,7 @@ object RelQueries {
     val minCountUni = ((nOld + nAdded) * 4L + 4L) / 5L
     val headroom = math.max(1L, nAdded)
     val probe = math.max(1L, minCountUni - headroom)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q200-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q200", dir)
     val artDir = base.resolve("seqpatterns")
     minedSequences(spark, dir, "old17", old, probe,
         math.max(1L, nOld))
@@ -1793,8 +1779,7 @@ object RelQueries {
     val minCountUni = (nUsers * 4L + 4L) / 5L
     val headroom = math.max(1L, nTouched)
     val probe = math.max(1L, minCountUni - headroom)
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q203-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q203", dir)
     val artDir = base.resolve("seqpatterns")
     minedSequences(spark, dir, "oldtouch", old, probe,
         math.max(1L, nOldUsers))
@@ -2185,8 +2170,7 @@ object RelQueries {
    * window algebra restricted to `valid_to IS NOT NULL`.
    */
   def userStateHistoryStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q126-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q126", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.scd2Stream(spark, dir)
@@ -2306,8 +2290,7 @@ object RelQueries {
     * availableNow into a parquet sink, read back — the oracle is the
     * batch funnel restricted to COMPLETED (stage 3) users. */
   def eventFunnelStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q131-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q131", dir)
     val out = base.resolve("out")
     graft.streaming.StreamRun.withStatePartitions(spark, 8) {
       val q = graft.streaming.EventStreams.funnelStream(spark, dir)
@@ -2820,8 +2803,7 @@ object RelQueries {
    * the raw parquet — layout must never change results) hash-matches.
    */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q153-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q153", dir)
     graft.operators.Layout.writeBucketed(
       Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus")),
@@ -2861,8 +2843,7 @@ object RelQueries {
    * exact-decimal discipline.
    */
   def bucketedRollup(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.staged(java.nio.file.Paths.get(
-      "/tmp", "graft-q158-" + dir.replaceAll("[^A-Za-z0-9.]", "_")))
+    val base = graft.Fs.stagedFor("q158", dir)
     graft.operators.Layout.writeBucketed(
       Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity")),

@@ -10,44 +10,34 @@ import org.apache.spark.sql.functions._
  * output, which the reference re-mines from scratch on every run
  * (`reference pfp/FPGrowthCore.scala:49-65` has no refresh path).
  *
- * Design: FUP-style candidate refresh (Cheung et al. 1996, "Maintenance
- * of Discovered Association Rules in Large Databases"), NOT group
- * re-mining — support counts are ADDITIVE (`count_union = count_old +
- * count_delta`), so an artifact mined from the old snapshot at the
- * REDUCED absolute threshold
- *
- *   `minCount_probe = max(1, minCount_union - |delta|)`
- *
- * provably contains every itemset that can be union-frequent: an
- * itemset absent from it has `count_old < minCount_union - |delta|`,
- * and the delta can add at most `|delta|` occurrences. The refresh then
- * (1) counts each artifact candidate's EXACT support in the delta alone
- * (one bounded subset enumeration over the added transactions — no
- * re-mining, no old-corpus rescan) and (2) sums and re-thresholds.
- * The result is bit-equal to a full re-mine at `minCount_union` —
- * which is exactly what the q170 oracle states by mining the union
- * corpus directly (same statement as q03).
- *
- * FULL-RE-MINE TRIGGER, part of the contract (require, not prose): the
- * delta path is sound only while `|delta| < minCount_union`. A delta
- * that large is not an increment — itemsets frequent in the delta alone
- * could enter the frequent family without ever appearing in the
- * artifact. Callers hitting the require re-mine from scratch (and
- * SHOULD also re-mine, efficiency-wise, well before that point: the
- * probe threshold — and with it the artifact size — degrades as the
- * delta grows; re-snapshot when `|delta|` reaches a fixed fraction of
- * `minCount_union`).
+ * Design: the FUP/FUP2 candidate refresh of [[Fup]] (the probe-threshold
+ * candidate bound, the re-mine trigger, deletions carrying no bound
+ * term), NOT group re-mining. This family's additivity contract:
+ * transactions are rows, so support counts are additive over added and
+ * removed transactions with no further clause — `count_new = count_old
+ * + count_added − count_removed`, where `removed` is a sub-multiset of
+ * the corpus state the artifact reflects (you can only delete rows that
+ * exist; under it no stored count goes negative). The charged unit of
+ * the bound is the cumulative ADDED transaction count. Each fold counts
+ * every artifact candidate's EXACT support in the changed transactions
+ * alone (one bounded subset enumeration — no re-mining, no old-corpus
+ * rescan) and adds it; a refresh then re-thresholds. The result is
+ * bit-equal to a full re-mine at `minCount_union` — which is exactly
+ * what the q170 oracle states by mining the union corpus directly (same
+ * statement as q03).
  *
  * Arity is capped at 3 throughout — the family's oracle-exactness cap
- * (q03/q04/q168); the subset enumeration below is hard-wired to it.
+ * (q03/q04/q168); the subset enumeration below is hard-wired to it, so
+ * a fold refuses an artifact holding a wider itemset instead of
+ * silently leaving its count stale.
  *
  * Scale shape: the artifact build is one FP-growth run over the OLD
  * snapshot (paid once per snapshot, amortized across refreshes); each
  * refresh touches only `|delta|` transactions — the enumeration
- * explodes at most `m + C(m,2) + C(m,3)` subset rows per added
+ * explodes at most `m + C(m,2) + C(m,3)` subset rows per changed
  * transaction over the candidate item universe `m = |F-list at
  * minCount_probe|` (candidate-filtered BEFORE enumeration), partial-
- * aggregated into delta counts, then one equi-join against the
+ * aggregated into delta counts, then merged into the collected
  * artifact. No stage scales with the old corpus.
  */
 object ItemsetRefresh {
@@ -63,14 +53,13 @@ object ItemsetRefresh {
   def deltaCounts(
       added: DataFrame, itemsCol: String,
       candidateItems: Seq[String]): DataFrame =
-    subsetCounts(
-      added.select(col(itemsCol).as("__items"), lit(1L).as("__sign")),
-      candidateItems)
+    signedCounts(Seq(added -> 1), itemsCol, candidateItems)
 
   /**
-   * The shared subset enumeration: every arity-<=3 subset of the
-   * candidate-filtered items, `sum(__sign)` per canonical key, out of
-   * ONE pass over `tagged` (`(__items, __sign)`).
+   * The signed correction plan: every arity-<=3 subset of each side's
+   * candidate-filtered transactions, `sum(sign)` per canonical key, out
+   * of ONE pass — the sides union with a sign column (no union for a
+   * single side, so the add-only plan is exactly [[deltaCounts]]').
    *
    * Shape notes (the r17 q127/q98 discipline — no interpreted HOFs, no
    * re-scanning unions):
@@ -88,9 +77,13 @@ object ItemsetRefresh {
    *    `{i1,i2}` — each subset exactly once, already canonical
    *    (in-order positions over a sorted array).
    */
-  private def subsetCounts(
-      tagged: DataFrame, candidateItems: Seq[String]): DataFrame = {
+  private[graft] def signedCounts(
+      sides: Seq[(DataFrame, Int)], itemsCol: String,
+      candidateItems: Seq[String]): DataFrame = {
     val stop = array(lit(null).cast("string"))
+    val tagged = sides.map { case (df, sign) =>
+      df.select(col(itemsCol).as("__items"), lit(sign.toLong).as("__sign"))
+    }.reduce(_ unionByName _)
     val f = tagged.select(
       array_intersect(col("__items"),
         typedLit[Seq[String]](candidateItems)).as("fi"),
@@ -122,50 +115,17 @@ object ItemsetRefresh {
   /**
    * Fold a delta's exact candidate counts into a PROBE-threshold
    * artifact `(itemset, freq)` WITHOUT re-thresholding — the streaming
-   * building block: because counts are additive and the candidate set
-   * (the artifact's arity-1 rows) is left intact, the fold is
-   * associative over delta batches — `fold(fold(A, d1), d2) ==
-   * fold(A, d1 ++ d2)` row for row — so a q135-style read-merge-swap
-   * stream maintains the artifact batch by batch and thresholds ONCE
-   * at read time. Re-thresholding mid-stream would be UNSOUND: it
-   * drops probe-only candidates that later batches still need.
-   *
-   * `nAddedCumulative` is the TOTAL delta transaction count folded so
-   * far including this batch — the soundness require (see the object
-   * scaladoc: the candidate bound holds only while the whole folded
-   * delta stays under `minCount_union`) lives here so no per-batch
-   * caller can skip it.
+   * building block (see [[Fup]] for why folds are associative and
+   * threshold once at read). `nAddedCumulative` is the TOTAL delta
+   * transaction count folded so far including this batch; the
+   * candidate-bound require lives here so no per-batch caller can skip
+   * it.
    */
   def fold(
       stored: DataFrame, added: DataFrame, itemsCol: String,
-      minCountUnion: Long, nAddedCumulative: Long): DataFrame = {
-    // a 0-transaction delta adds nothing and is sound at ANY threshold
-    require(nAddedCumulative == 0 || nAddedCumulative < minCountUnion,
-      s"cumulative delta of $nAddedCumulative transactions >= " +
-        s"minCount_union $minCountUnion: the candidate bound no longer " +
-        "holds — re-mine from scratch (see ItemsetRefresh scaladoc)")
-    val spark = stored.sparkSession
-    import spark.implicits._
-    // One artifact collect serves the candidate F-list AND the merge
-    // (this fold always collected the arity-1 rows for the candidate
-    // filter; the artifact is support-bounded metadata, so collecting
-    // all of it costs the same bounded job). The merge is exact
-    // integer addition on candidate-sized rows — identical to the
-    // left-join/coalesce plan it replaces, minus one distributed join
-    // + artifact rescan per micro-batch.
-    val art = artifactRows(stored)
-    val candidateItems = art.collect { case (i, _) if !i.contains(",") => i }
-    val delta = deltaCounts(added, itemsCol, candidateItems)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    art.map { case (i, f) => (i, f + delta.getOrElse(i, 0L)) }
-      .toDF("itemset", "freq")
-  }
-
-  /** The stored artifact as driver rows — support-bounded metadata
-    * (the histogram/codebook collect discipline). */
-  private def artifactRows(stored: DataFrame): Seq[(String, Long)] =
-    stored.select(col("itemset"), col("freq"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      minCountUnion: Long, nAddedCumulative: Long): DataFrame =
+    signedFold(stored, Seq(added -> 1), itemsCol, minCountUnion,
+      nAddedCumulative)
 
   /**
    * Fold a delta into a loaded probe artifact `(itemset, freq)` and
@@ -180,75 +140,34 @@ object ItemsetRefresh {
       .where(col("freq") >= minCountUnion)
 
   /**
-   * SIGNED fold — additions AND deletions in one pass (the FUP2
-   * extension, Cheung et al. 1997, "A General Incremental Technique
-   * for Maintaining Discovered Association Rules": transactions leave
-   * the corpus as well as enter it). Support stays additive with
-   * sign: `count_new = count_old + count_added − count_removed`, so
-   * the fold is still associative over CDC batches and the streaming
-   * read-merge-swap lifecycle carries over unchanged.
-   *
-   * THE BOUND IS ASYMMETRIC — deletions are free. A union(new)-
-   * frequent itemset has `count_new >= minCount_new`, and since
-   * `count_removed(p) >= 0`,
-   *
-   *   `count_old = count_new − count_added(p) + count_removed(p)
-   *              >= minCount_new − |added|`
-   *
-   * — the probe threshold `minCount_new − |addedCumulative|` from the
-   * add-only [[fold]] still catches every candidate, with NO term for
-   * `|removed|`: removing transactions can only have INFLATED the old
-   * count, never hidden a future-frequent itemset from the old-
-   * snapshot mine. The require therefore guards the cumulative ADDED
-   * count alone; a deletions-only maintenance pass is sound at any
-   * threshold. (Note `minCount_new` is the absolute threshold over
-   * the NEW corpus size — with net deletions it shrinks, which the
-   * caller prices into the probe.)
-   *
-   * CALLER'S CONTRACT: `removed` is a sub-multiset of the corpus
-   * state the artifact currently reflects (you can only delete rows
-   * that exist); under it no stored count goes negative. Work per
-   * fold: both correction terms are delta-sized candidate-filtered
-   * subset enumerations + one artifact-sized equi-join each — no
-   * old-corpus rescan, exactly [[fold]]'s shape twice.
+   * SIGNED fold — additions AND deletions in one pass (FUP2:
+   * transactions leave the corpus as well as enter it). The require
+   * guards the cumulative ADDED count alone; removed transactions are
+   * free ([[Fup]]), so a deletions-only maintenance pass is sound at
+   * any threshold. Both correction terms come out of one distributed
+   * pass — [[fold]]'s shape once, not twice.
    */
   def foldSigned(
       stored: DataFrame, added: DataFrame, removed: DataFrame,
       itemsCol: String, minCountUnion: Long,
-      nAddedCumulative: Long): DataFrame = {
-    require(nAddedCumulative == 0 || nAddedCumulative < minCountUnion,
-      s"cumulative ADDED delta of $nAddedCumulative transactions >= " +
-        s"minCount_union $minCountUnion: the candidate bound no longer " +
-        "holds — re-mine from scratch (see foldSigned scaladoc; " +
-        "deletions carry no bound term)")
-    val spark = stored.sparkSession
-    import spark.implicits._
-    val art = artifactRows(stored)
-    val candidateItems = art.collect { case (i, _) if !i.contains(",") => i }
-    // both correction terms out of ONE distributed pass: the two
-    // deltas union with a +/-1 sign column and the enumeration counts
-    // sum(sign) per itemset — [[fold]]'s shape once, not twice
-    def signed(df: DataFrame, s: Int): DataFrame =
-      df.select(col(itemsCol).as("__items")).withColumn("__sign", lit(s.toLong))
-    val corr = deltaCountsSigned(
-        signed(added, 1).unionByName(signed(removed, -1)), candidateItems)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    art.map { case (i, f) => (i, f + corr.getOrElse(i, 0L)) }
-      .toDF("itemset", "freq")
+      nAddedCumulative: Long): DataFrame =
+    signedFold(stored, Seq(added -> 1, removed -> -1), itemsCol,
+      minCountUnion, nAddedCumulative)
+
+  private def signedFold(
+      stored: DataFrame, sides: Seq[(DataFrame, Int)], itemsCol: String,
+      minCountUnion: Long, nAddedCumulative: Long): DataFrame = {
+    Fup.requireBound(nAddedCumulative, minCountUnion, "added transactions")
+    Fup.fold(stored.select(col("itemset"), col("freq")), "itemset", "freq") {
+      keys =>
+        val wide = keys.find(_.count(_ == ',') >= 3)
+        require(wide.isEmpty, s"artifact itemset {${wide.getOrElse("")}} " +
+          "has arity > 3, beyond the fold's subset enumeration: cap the " +
+          "artifact at arity 3")
+        signedCounts(sides, itemsCol, keys.filterNot(_.contains(",")))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
   }
-
-  /** [[deltaCounts]] over a `(__items, __sign)` frame, counting
-    * `sum(__sign)` per subset — the one-pass signed correction for
-    * [[foldSigned]]. */
-  private def deltaCountsSigned(
-      tagged: DataFrame, candidateItems: Seq[String]): DataFrame =
-    subsetCounts(tagged, candidateItems)
-
-  /** Test/probe shim: the signed enumeration's plan, for `.explain`
-    * dumps (Q193Probe). */
-  private[graft] def deltaCountsSignedPlanProbe(
-      tagged: DataFrame, candidateItems: Seq[String]): DataFrame =
-    subsetCounts(tagged, candidateItems)
 
   /**
    * [[foldSigned]] + re-threshold at the NEW corpus's minCount —

@@ -94,7 +94,7 @@ object SequentialPatterns {
     * analysis+codegen of ~155 chained-native trees at ~1.5-2 s — a win
     * inside the mine (one pass per level over the whole corpus, native
     * early-exit scans per row) and a 2-3.5x LOSS in the per-batch
-    * [[supportCounts]] path, whose inputs are delta-sized by design
+    * [[signedSupport]] path, whose inputs are delta-sized by design
     * (the round-16 regression, adjudicated in OPTIMIZATION_r17.md).
     * Env-overridable for adjudication experiments; the local default is
     * also the production default — the bound is a plan-size budget, not
@@ -130,18 +130,17 @@ object SequentialPatterns {
   }
 
   /**
-   * Exact support counts, over `events`' per-key sequences, of the
-   * given candidate `patterns` — `(pattern, support)` with the
-   * `"a->b"` string key, omitting never-contained candidates. One
-   * distributed pass: the candidate list ships as a plan literal
-   * (caller-bounded — artifact-sized at the [[refresh]] call site),
-   * containment is the greedy fold. The building block of the
-   * sequence-family artifact lifecycle. Lazy — the returned plan
-   * executes when the caller acts on it.
-   *
-   * Empty candidates are dropped and duplicates collapse to one row
-   * (the groupBy key is the pattern), so degenerate inputs cannot fan
-   * out the lifecycle joins.
+   * Signed containment counts of the candidate `patterns` —
+   * `(pattern, support)` with the `"a->b"` string key and `support =
+   * Σ sign × (keys whose sequence on that side contains the pattern)`,
+   * omitting candidates no side contains. ONE distributed job for any
+   * number of sides: each side's events are tagged with its index and
+   * sign and unioned (no union for a single side), each (key, side)
+   * builds its ordered sequence in one shuffle, and one aggregation sums
+   * the signs. The candidate list ships as a plan literal (caller-
+   * bounded — artifact-sized at the fold call sites); containment is
+   * the greedy fold. Lazy — the returned plan executes when the caller
+   * acts on it.
    *
    * Deliberately the GENERIC fold arm, never the [[matchEndLit]]
    * specialization: every lifecycle caller hands this delta-sized
@@ -152,105 +151,63 @@ object SequentialPatterns {
    * earns its plan cost only on corpus-sized passes (the mine's
    * extension layer, q201's literal probes).
    */
-  def supportCounts(
-      events: DataFrame, keyCol: String, tsCol: String, idCol: String,
-      typeCol: String, patterns: Seq[Seq[String]]): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val pats = patterns.filter(_.nonEmpty).distinct
-    if (pats.isEmpty) {
-      Seq.empty[(String, Long)].toDF("pattern", "support")
-    } else {
-      val seqs = events.where(col(typeCol).isNotNull)
-        .groupBy(col(keyCol))
-        .agg(sort_array(collect_list(struct(col(tsCol).as("t"),
-          col(idCol).as("i"), col(typeCol).as("y")))).as("s"))
-        .select(expr("transform(s, x -> x.y)").as("seq"))
-      val patLit = array(pats.map(p => array(p.map(lit): _*)): _*)
-      seqs
-        .select(explode(patLit).as("pat"), col("seq"))
-        .where(greedyMatchEnd(col("seq"), col("pat")) > 0)
-        .groupBy(array_join(col("pat"), "->").as("pattern"))
-        .agg(count(lit(1)).as("support"))
-    }
-  }
-
-  /** [[supportCounts]] for BOTH sides of a touched-key correction in
-    * ONE distributed job: returns `pattern -> (old count, new count)`
-    * as driver-side metadata (the result is candidate-bounded by
-    * construction). The two inputs are tagged and unioned so each
-    * key's old and new sequences build in one shuffle and both
-    * containment counts come out of one aggregation — [[foldTouched]]
-    * previously paid two full scan+sequence+count jobs per micro-batch
-    * for numbers one pass derives. */
-  private def pairCounts(
-      oldEv: DataFrame, newEv: DataFrame, keyCol: String, tsCol: String,
+  private[fpm] def signedSupport(
+      sides: Seq[(DataFrame, Int)], keyCol: String, tsCol: String,
       idCol: String, typeCol: String,
-      patterns: Seq[Seq[String]]): Map[String, (Long, Long)] = {
-    val pats = patterns.filter(_.nonEmpty).distinct
-    if (pats.isEmpty) Map.empty
-    else pairCountsPlan(oldEv, newEv, keyCol, tsCol, idCol, typeCol, pats)
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (p, rows) =>
-        val bySide = rows.map(r => r.getInt(1) -> r.getLong(2)).toMap
-        p -> (bySide.getOrElse(0, 0L), bySide.getOrElse(1, 0L))
-      }
-  }
-
-  /** The lazy plan under [[pairCounts]] — `(pattern, __side, c)` with
-    * side 0 = old, 1 = new. Package-private so plan dumps can show the
-    * one-job shape. */
-  private[fpm] def pairCountsPlan(
-      oldEv: DataFrame, newEv: DataFrame, keyCol: String, tsCol: String,
-      idCol: String, typeCol: String,
-      pats: Seq[Seq[String]]): DataFrame = {
-    def side(ev: DataFrame, tag: Int): DataFrame =
+      patterns: Seq[Seq[String]]): DataFrame = {
+    val seqs = sides.zipWithIndex.map { case ((ev, sign), j) =>
       ev.select(col(keyCol).as("k"), col(tsCol).as("t"),
-        col(idCol).as("i"), col(typeCol).as("y"))
+          col(idCol).as("i"), col(typeCol).as("y"),
+          lit(j).as("__side"), lit(sign.toLong).as("__sign"))
         .where(col("y").isNotNull)
-        .withColumn("__side", lit(tag))
-    val seqs = side(oldEv, 0).unionByName(side(newEv, 1))
-      .groupBy(col("k"), col("__side"))
+    }.reduce(_ unionByName _)
+      .groupBy(col("k"), col("__side"), col("__sign"))
       .agg(sort_array(collect_list(struct(col("t"), col("i"),
         col("y")))).as("s"))
-      .select(col("__side"), expr("transform(s, x -> x.y)").as("seq"))
-    val patLit = array(pats.map(p => array(p.map(lit): _*)): _*)
+      .select(col("__sign"), expr("transform(s, x -> x.y)").as("seq"))
+    val patLit = array(patterns.map(p => array(p.map(lit): _*)): _*)
     seqs
-      .select(col("__side"), explode(patLit).as("pat"), col("seq"))
+      .select(col("__sign"), explode(patLit).as("pat"), col("seq"))
       .where(greedyMatchEnd(col("seq"), col("pat")) > 0)
-      .groupBy(array_join(col("pat"), "->").as("pattern"), col("__side"))
-      .agg(count(lit(1)).as("c"))
+      .groupBy(array_join(col("pat"), "->").as("pattern"))
+      .agg(sum(col("__sign")).as("support"))
   }
 
+  /** This family's [[Fup.fold]]: `stored` `(pattern, plen, support)`
+    * plus the signed containment counts of its patterns over `sides` —
+    * one correction job, none when the artifact is empty (empty
+    * patterns are dropped and duplicates collapse before the plan
+    * literal is built). */
+  private def signedFold(
+      stored: DataFrame, sides: Seq[(DataFrame, Int)], keyCol: String,
+      tsCol: String, idCol: String, typeCol: String): DataFrame =
+    Fup.fold(stored.select(col("pattern"), col("plen"), col("support")),
+        "pattern", "support") { keys =>
+      val pats = keys.map(_.split("->").toSeq).filter(_.nonEmpty).distinct
+      if (pats.isEmpty) Map.empty
+      else signedSupport(sides, keyCol, tsCol, idCol, typeCol, pats)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+
   /**
-   * FUP-style refresh of a frequent-sequence artifact for a
+   * FUP refresh ([[Fup]]) of a frequent-sequence artifact for a
    * KEY-DISJOINT delta — the [[graft.fpm.ItemsetRefresh]] lifecycle
-   * applied to the sequence family, with the family's OWN soundness
-   * boundary stated honestly: sequence support counts are additive
-   * over KEYS, not rows — `support_union(p) = support_old(p) +
-   * support_delta(p)` holds exactly when the delta's keys are disjoint
-   * from the old snapshot's (new users), because an event that EXTENDS
-   * an existing key's sequence can create containments in the old
-   * half, which no delta-only count can see. Key-disjointness is the
-   * caller's CONTRACT (the itemset family needs no such clause —
-   * transactions are rows, rows are trivially disjoint); a
-   * same-key-extending ingest needs a re-mine, or a per-key
-   * changed-keys recount (recount only the touched keys' old
-   * sequences — still delta-sized when touches are sparse).
-   *
-   * Under that contract the FUP bound transfers verbatim: a pattern
-   * absent from an artifact mined at `minCount_union - |deltaKeys|`
-   * has `support_old < minCount_union - |deltaKeys|`, and disjoint
-   * delta keys add at most `|deltaKeys|` — so artifact candidates +
-   * exact delta counts + one re-threshold equal the union re-mine bit
-   * for bit. The require is the same full-re-mine trigger as
-   * `ItemsetRefresh`'s.
+   * applied to the sequence family. Its additivity contract: sequence
+   * support counts are additive over KEYS, not rows — `support_union(p)
+   * = support_old(p) + support_delta(p)` holds exactly when the delta's
+   * keys are disjoint from the old snapshot's (new users), because an
+   * event that EXTENDS an existing key's sequence can create
+   * containments in the old half, which no delta-only count can see.
+   * Key-disjointness is the caller's CONTRACT (the itemset family needs
+   * no such clause — transactions are rows, rows are trivially
+   * disjoint); a same-key-extending ingest needs [[refreshTouched]] or a
+   * re-mine. Under it the charged unit of the candidate bound is the
+   * delta's key count: disjoint delta keys add at most `|deltaKeys|`.
    *
    * `stored`: `(pattern, plen, support)` mined at the probe threshold.
    * Work: only the delta's events are sequenced; the stored side is
-   * artifact-sized (one bounded collect for the candidate list, one
-   * equi-join).
+   * artifact-sized (one bounded collect for the candidates and the
+   * merge).
    */
   def refresh(
       stored: DataFrame, deltaEvents: DataFrame, keyCol: String,
@@ -262,25 +219,22 @@ object SequentialPatterns {
 
   /**
    * Changed-keys recount refresh — the SAME-KEY-EXTENDING ingest case
-   * [[refresh]] excludes (its scaladoc's promissory note, discharged):
-   * when delta events extend EXISTING keys' sequences, per-key
-   * support is not additive, but it IS per-key replaceable —
-   * `support_new(p) = support_old(p) - contained_oldTouched(p) +
-   * contained_newTouched(p)`, because only the touched keys' terms in
-   * the support sum change. Both correction terms are exact
-   * containment counts over ONLY the touched keys' sequences (old and
-   * new versions) — delta-sized work when touches are sparse, and at
-   * warehouse scale the old-touched retrieval is a key-pruned scan
-   * (the q64 layout's case).
+   * [[refresh]] excludes. Its additivity contract: when delta events
+   * extend EXISTING keys' sequences, per-key support is not additive,
+   * but it IS per-key replaceable — `support_new(p) = support_old(p) -
+   * contained_oldTouched(p) + contained_newTouched(p)`, because only the
+   * touched keys' terms in the support sum change. Both correction
+   * terms are exact containment counts over ONLY the touched keys'
+   * sequences (old and new versions) — delta-sized work when touches
+   * are sparse, and at warehouse scale the old-touched retrieval is a
+   * key-pruned scan (the q64 layout's case).
    *
-   * Candidate bound (FUP shape, touched-keys form): a touched key can
-   * raise a pattern's support by at most 1, and only touched keys can
-   * raise it — so `support_new(p) <= support_old(p) + |touchedKeys|`,
-   * and an artifact mined at `minCount_union - |touchedKeys|` contains
-   * every pattern that can be union-frequent. Keys whose entire
-   * history is new (absent from the old snapshot) are just touched
-   * keys whose old containment terms are zero — the disjoint-delta
-   * [[refresh]] is the special case where ALL touched keys are such.
+   * The charged unit of the candidate bound is the touched-key count: a
+   * touched key can raise a pattern's support by at most 1, and only
+   * touched keys can raise it. Keys whose entire history is new (absent
+   * from the old snapshot) are just touched keys whose old containment
+   * terms are zero — the disjoint-delta [[refresh]] is the special case
+   * where ALL touched keys are such.
    *
    * `oldTouched`/`newTouched`: the touched keys' events in the old
    * resp. new corpus state (the caller filters; a semi-join against
@@ -296,70 +250,41 @@ object SequentialPatterns {
 
   /**
    * Un-thresholded [[refreshTouched]] — the CDC-stream building block,
-   * [[fold]]'s role for same-key-extending batches: the candidate set
-   * stays intact and the per-key correction terms for KEY-DISJOINT
-   * batches commute and sum, so folding touched-key batches is
-   * associative and batch boundaries cannot matter; threshold ONCE at
-   * read (mid-stream thresholding drops probe-only candidates later
-   * batches still need). `nTouchedCumulative` is the total distinct
-   * touched keys folded so far including this batch — batches must be
-   * key-disjoint among THEMSELVES (one key's whole churn inside one
-   * batch: a key touched twice would subtract a stale old term the
-   * second time), and the FUP-bound require lives here so no per-batch
-   * caller can skip it.
+   * [[fold]]'s role for same-key-extending batches: the per-key
+   * correction terms for KEY-DISJOINT batches commute and sum, so
+   * folding touched-key batches is associative. `nTouchedCumulative` is
+   * the total distinct touched keys folded so far including this batch
+   * — batches must be key-disjoint among THEMSELVES (one key's whole
+   * churn inside one batch: a key touched twice would subtract a stale
+   * old term the second time), and the candidate-bound require lives
+   * here so no per-batch caller can skip it. Both correction terms come
+   * out of ONE distributed job.
    */
   def foldTouched(
       stored: DataFrame, oldTouched: DataFrame, newTouched: DataFrame,
       keyCol: String, tsCol: String, idCol: String, typeCol: String,
       minCountUnion: Long, nTouchedCumulative: Long): DataFrame = {
-    require(nTouchedCumulative == 0 || nTouchedCumulative < minCountUnion,
-      s"cumulative touched-key set of $nTouchedCumulative >= " +
-        s"minCount_union $minCountUnion: the candidate bound no longer " +
-        "holds — re-mine from scratch (see refreshTouched scaladoc)")
-    val spark = stored.sparkSession
-    import spark.implicits._
-    // One artifact collect serves the candidate list AND the merge
-    // (the artifact is support-bounded metadata — the same bounded
-    // collect this fold always did for the candidate literal); both
-    // correction terms come out of ONE distributed pass (pairCounts).
-    // The merge itself is exact integer arithmetic, identical to the
-    // left-join/coalesce plan it replaces, on candidate-sized rows.
-    val art = artifactRows(stored)
-    val corr = pairCounts(oldTouched, newTouched,
-      keyCol, tsCol, idCol, typeCol, art.map(_._1.split("->").toSeq))
-    art.map { case (p, l, s) =>
-      val (o, n) = corr.getOrElse(p, (0L, 0L))
-      (p, l, s - o + n)
-    }.toDF("pattern", "plen", "support")
+    Fup.requireBound(nTouchedCumulative, minCountUnion, "touched keys")
+    signedFold(stored, Seq(oldTouched -> -1, newTouched -> 1),
+      keyCol, tsCol, idCol, typeCol)
   }
-
-  /** The stored artifact as driver rows — support-bounded metadata by
-    * the PrefixSpan output-bounded premise, so the collect is the same
-    * bounded layer-collect convention the mine itself uses. */
-  private def artifactRows(stored: DataFrame): Seq[(String, Int, Long)] =
-    stored.select(col("pattern"), col("plen"), col("support"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
 
   /**
    * KEY-ERASURE refresh — the deletion-only [[refreshTouched]] case
    * (GDPR right-to-be-forgotten, the maintenance op a user-keyed
    * warehouse actually runs on a deadline): remove whole keys and
-   * their histories, keep the pattern artifact exact. There is NO
-   * candidate-bound require here and none is needed — erasure only
-   * LOWERS supports, so any pattern frequent after it (even at the
-   * SHRUNKEN `minCountNew` the smaller key universe implies under a
-   * support-fraction convention) had `support_old >= support_new >=
-   * minCountNew` and is present in any artifact mined at or below
-   * `minCountNew`. That is the caller's one obligation: the stored
-   * artifact's mine threshold must not exceed the POST-erasure
-   * minCount (a fraction-convention artifact needs probe slack for
-   * the shrinkage, or a re-mine — the same re-snapshot discipline as
-   * the additive families; the declared row mines its artifact at
-   * exactly `minCountNew` to state the boundary sharply).
+   * their histories, keep the pattern artifact exact. Erasure only
+   * LOWERS supports, so it carries no candidate-bound require
+   * ([[Fup]]: deletions are free). The caller's one obligation: the
+   * stored artifact's mine threshold must not exceed the POST-erasure
+   * `minCountNew` (a support-fraction convention shrinks it with the key
+   * universe, so such an artifact needs probe slack for the shrinkage,
+   * or a re-mine; the declared row mines its artifact at exactly
+   * `minCountNew` to state the boundary sharply).
    *
    * Work: one containment count over ONLY the erased keys' events —
    * delta-sized, key-pruned under the q64 layout — one artifact-sized
-   * join, one re-threshold. The untouched keys are never rescanned:
+   * merge, one re-threshold. The untouched keys are never rescanned:
    * erasing a user costs their own history, not the corpus.
    */
   def erase(
@@ -373,30 +298,22 @@ object SequentialPatterns {
    * Un-thresholded [[erase]] — the erasure-QUEUE streaming building
    * block: subtraction terms for key-disjoint batches commute and
    * sum, so folding erasure requests batch by batch is associative
-   * and the threshold applies once at read. No candidate-bound
-   * require exists on this path at all (deletions are free — see
-   * [[erase]]); the stream's one contract is that each key is erased
-   * ONCE (a key whose erasure request is delivered in two different
-   * batches would subtract twice — the batch-id replay guard handles
-   * redelivery of the SAME batch; no in-batch require can check
-   * cross-batch dedup). [[eraseBatchOnce]] turns that contract into a
-   * CHECKED invariant via a durable erased-key record committed with
-   * each swap — the form every stream caller should use; this raw fold
-   * remains the algebra underneath it and the right call when the
-   * caller guarantees disjointness structurally (q195's one shot).
+   * and the threshold applies once at read. The stream's one contract
+   * is that each key is erased ONCE (a key whose erasure request is
+   * delivered in two different batches would subtract twice — the
+   * batch-id replay guard handles redelivery of the SAME batch; no
+   * in-batch require can check cross-batch dedup). [[eraseBatchOnce]]
+   * turns that contract into a CHECKED invariant via a durable
+   * erased-key record committed with each swap — the form every stream
+   * caller should use; this raw fold remains the algebra underneath it
+   * and the right call when the caller guarantees disjointness
+   * structurally (q195's one shot).
    */
   def eraseFold(
       stored: DataFrame, erasedEvents: DataFrame, keyCol: String,
-      tsCol: String, idCol: String, typeCol: String): DataFrame = {
-    val spark = stored.sparkSession
-    import spark.implicits._
-    val art = artifactRows(stored)
-    val gone = supportCounts(erasedEvents, keyCol, tsCol, idCol, typeCol,
-        art.map(_._1.split("->").toSeq))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    art.map { case (p, l, s) => (p, l, s - gone.getOrElse(p, 0L)) }
-      .toDF("pattern", "plen", "support")
-  }
+      tsCol: String, idCol: String, typeCol: String): DataFrame =
+    signedFold(stored, Seq(erasedEvents -> -1), keyCol, tsCol, idCol,
+      typeCol)
 
   /** Default erase-once redelivery horizon, in batch ids: a duplicate
     * erase request is assumed to arrive at most this many batches
@@ -471,35 +388,20 @@ object SequentialPatterns {
 
   /**
    * Un-thresholded [[refresh]] — the streaming building block, exactly
-   * [[graft.fpm.ItemsetRefresh.fold]]'s role for this family: the
-   * candidate (pattern) set is left intact, so folding key-disjoint
-   * delta batches is associative and batch boundaries cannot matter;
-   * threshold ONCE at read. `nAddedKeysCumulative` is the total
-   * distinct delta keys folded so far including this batch (each key's
-   * WHOLE event history must arrive within one batch — a key split
-   * across batches is the same additivity violation as a same-key
-   * extension); the FUP-bound require lives here so no per-batch
-   * caller can skip it.
+   * [[graft.fpm.ItemsetRefresh.fold]]'s role for this family (see
+   * [[Fup]]). `nAddedKeysCumulative` is the total distinct delta keys
+   * folded so far including this batch (each key's WHOLE event history
+   * must arrive within one batch — a key split across batches is the
+   * same additivity violation as a same-key extension); the
+   * candidate-bound require lives here so no per-batch caller can skip
+   * it.
    */
   def fold(
       stored: DataFrame, deltaEvents: DataFrame, keyCol: String,
       tsCol: String, idCol: String, typeCol: String,
       minCountUnion: Long, nAddedKeysCumulative: Long): DataFrame = {
-    // a 0-key delta adds nothing and is sound at ANY threshold —
-    // including the degenerate empty-corpus minCount_union = 0
-    require(nAddedKeysCumulative == 0 || nAddedKeysCumulative < minCountUnion,
-      s"cumulative delta of $nAddedKeysCumulative new keys >= " +
-        s"minCount_union $minCountUnion: the candidate bound no longer " +
-        "holds — re-mine from scratch " +
-        "(see SequentialPatterns.refresh scaladoc)")
-    val spark = stored.sparkSession
-    import spark.implicits._
-    val art = artifactRows(stored)
-    val delta = supportCounts(deltaEvents, keyCol, tsCol, idCol, typeCol,
-        art.map(_._1.split("->").toSeq))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    art.map { case (p, l, s) => (p, l, s + delta.getOrElse(p, 0L)) }
-      .toDF("pattern", "plen", "support")
+    Fup.requireBound(nAddedKeysCumulative, minCountUnion, "new keys")
+    signedFold(stored, Seq(deltaEvents -> 1), keyCol, tsCol, idCol, typeCol)
   }
 
   /**

@@ -229,4 +229,12 @@ class FsSpec extends AnyFunSuite {
     intercept[RuntimeException](Fs.readKeyMap(art, "erased"))
     Fs.deleteRecursively(base)
   }
+
+  test("stagedFor: /tmp/graft-<tag>-<corpus dir with non [A-Za-z0-9.] mapped to _>, truncated") {
+    val dir = Fs.stagedFor("fsspec", "/root/testdata/sf0.01")
+    assert(dir == Paths.get("/tmp/graft-fsspec-_root_testdata_sf0.01"))
+    Files.createDirectories(dir.resolve("old"))
+    assert(Fs.stagedFor("fsspec", "/root/testdata/sf0.01") == dir)
+    assert(!Files.exists(dir), "a re-stage must truncate what the last invocation left")
+  }
 }

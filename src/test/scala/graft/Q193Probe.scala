@@ -44,8 +44,7 @@ object Q193Probe {
       time("minedItemsets (memo)") {
         mined = FpmQueries.minedItemsets(spark, d, "old211", old, probe)
       }
-      val staged = graft.Fs.staged(java.nio.file.Paths.get(
-        "/tmp", "graft-q193probe-" + d.replaceAll("[^A-Za-z0-9.]", "_")))
+      val staged = graft.Fs.stagedFor("q193probe", d)
       val artPath = staged.resolve("itemsets").toString
       time("artifact write") {
         mined.write.mode("overwrite").parquet(artPath)
@@ -59,7 +58,7 @@ object Q193Probe {
       }
       // --- refreshCdc internals, inlined
       var art: Seq[(String, Long)] = null
-      time("  artifactRows collect") {
+      time("  artifact collect") {
         art = stored.select(col("itemset"), col("freq"))
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       }
@@ -85,11 +84,11 @@ object Q193Probe {
           col("__sign"))
       val enum0 = singles.unionByName(pairs).unionByName(triples)
         .groupBy(col("itemset")).agg(sum(col("__sign")).as("freq_delta"))
-      time("  deltaCountsSigned collect") { enum0.collect(); () }
-      time("  deltaCountsSigned collect 2") { enum0.collect(); () }
-      // --- new one-chain shape, same inputs
+      time("  3-branch enum collect") { enum0.collect(); () }
+      time("  3-branch enum collect 2") { enum0.collect(); () }
+      // --- the shipped one-chain signed plan, same inputs
       val enum1 = graft.fpm.ItemsetRefresh
-        .deltaCountsSignedPlanProbe(tagged, candidateItems)
+        .signedCounts(Seq(added -> 1, removed -> -1), "items", candidateItems)
       time("  one-chain enum collect") { enum1.collect(); () }
       time("  one-chain enum collect 2") { enum1.collect(); () }
       if (pass == 1) {

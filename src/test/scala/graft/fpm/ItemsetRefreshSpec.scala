@@ -502,6 +502,20 @@ class ItemsetRefreshSpec extends AnyFunSuite {
     graft.Fs.deleteRecursively(base)
   }
 
+  test("a fold refuses an artifact itemset of arity above 3 instead of under-counting it") {
+    // the subset enumeration stops at arity 3: folding [a,b,c,d] into a
+    // stored {a,b,c,d}:5 would leave it at 5, not 6, and a refresh at
+    // minCount 6 would silently drop it
+    import spark.implicits._
+    val stored = Seq(("a", 5L), ("b", 5L), ("c", 5L), ("d", 5L), ("a,b,c,d", 5L))
+      .toDF("itemset", "freq")
+    val added = Seq(Seq("a", "b", "c", "d")).toDF("items")
+    val e = intercept[IllegalArgumentException] {
+      ItemsetRefresh.refresh(stored, added, "items", minCountUnion = 6L, nAdded = 1L)
+    }
+    assert(e.getMessage.contains("a,b,c,d") && e.getMessage.contains("arity"))
+  }
+
   test("a delta at or above minCount_union is refused (full re-mine trigger)") {
     import spark.implicits._
     val stored = Seq(("a", 5L)).toDF("itemset", "freq")

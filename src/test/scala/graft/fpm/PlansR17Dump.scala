@@ -7,12 +7,12 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 /** Dev tool: writes the round-17 before/after plan evidence for the
-  * sequence-lifecycle supportCounts adjudication into `plans/r17/`.
+  * sequence-lifecycle containment-count adjudication into `plans/r17/`.
   * The BEFORE shape is reconstructed from [[SequentialPatterns.matchEndLit]]
   * (still shipped — it is the mine's specialized arm) exactly as the
-  * round-16 supportCounts specialized arm built it; the AFTER shapes
-  * are the shipped [[SequentialPatterns.supportCounts]] fold arm and
-  * the one-job [[SequentialPatterns.pairCountsPlan]].
+  * round-16 specialized containment counts built it; the AFTER shapes
+  * are the shipped [[SequentialPatterns.signedSupport]] fold arm over
+  * one side and over foldTouched's two signed sides.
   * Run: `sbt "Test/runMain graft.fpm.PlansR17Dump"`. */
 object PlansR17Dump {
   def main(args: Array[String]): Unit = {
@@ -69,12 +69,12 @@ object PlansR17Dump {
 
     // AFTER: the fold arm (constant-size tree, lazy)
     dump("supportcounts_fold_after.txt",
-      SequentialPatterns.supportCounts(
-        ev.where(isDelta), "user_id", "tsu", "event_id", "event_type", pats))
+      SequentialPatterns.signedSupport(Seq(ev.where(isDelta) -> 1),
+        "user_id", "tsu", "event_id", "event_type", pats))
 
-    // AFTER: foldTouched's two supportCounts jobs fused into one
+    // AFTER: foldTouched's old (-1) and new (+1) sides in one job
     dump("foldtouched_paircounts_after.txt",
-      SequentialPatterns.pairCountsPlan(oldTouched, newTouched,
+      SequentialPatterns.signedSupport(Seq(oldTouched -> -1, newTouched -> 1),
         "user_id", "tsu", "event_id", "event_type", pats))
 
     spark.stop()

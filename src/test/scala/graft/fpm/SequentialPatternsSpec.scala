@@ -90,7 +90,7 @@ class SequentialPatternsSpec extends AnyFunSuite {
     // the literal-pattern native chain must return the IDENTICAL
     // 1-based greedy completion index as the generic fold — including
     // repeated symbols, prefix-only partial matches, and the empty
-    // sequence — because supportCounts/extendLayer pick an arm by
+    // sequence — because extendLayer picks an arm by
     // pattern-list size alone, never by data
     import org.apache.spark.sql.functions._
     import spark.implicits._
