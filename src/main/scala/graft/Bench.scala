@@ -237,6 +237,8 @@ object Bench {
     // JSON for continuity with rounds <= 15.
     val calibSec = if (calibs.nonEmpty) calibs.min else -1.0
     val sustainedSec = if (sustained.nonEmpty) sustained.min else -1.0
+    // A suite-level stamp, defined only at local[32]; never a per-row
+    // divisor (BENCH_NOTES.md, "How to A/B a row").
     val hostFactor =
       if (sustainedSec > 0)
         math.max(1.0, sustainedSec / SustainedCalibBaseline)

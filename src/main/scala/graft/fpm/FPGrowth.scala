@@ -34,7 +34,10 @@ import scala.collection.mutable
  *     Int arrays (Tungsten), far cheaper than serialized tree graphs.
  *  4. Shuffle on the group id as the partition id, then per-group
  *     [[FPTree]] build + extract with owner-validated suffixes
- *     (exactly-once global emission, no distinct needed downstream).
+ *     (exactly-once global emission, no distinct needed downstream). The
+ *     tree is primitive arrays (node-link header table, open-addressing
+ *     child index) and its conditional trees are sized by their own
+ *     prefix base, so the mining task allocates no boxed values.
  *
  * Scale notes (100 TB design): the only data-sized shuffle is step 3,
  * whose volume is bounded by sum(txn length x distinct groups touched)
