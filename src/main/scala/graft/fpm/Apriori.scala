@@ -1,6 +1,6 @@
 package graft.fpm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -65,7 +65,8 @@ class Apriori private (
     import spark.implicits._
     val handlePersist = input.storageLevel == StorageLevel.NONE
     if (handlePersist) input.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = input.count()
+    // Build the cache and count its rows in one job
+    val n = GraftShims.buildCache(input)(_.map(_.numRows.toLong).fold(0L)(_ + _))
     val minCount = math.max(1L, math.ceil(minSupport * n).toLong)
 
     val l1: Array[(String, Long)] = input

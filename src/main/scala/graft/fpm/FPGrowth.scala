@@ -1,10 +1,12 @@
 package graft.fpm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.AbstractIterator
 import scala.collection.mutable
 
 /**
@@ -21,17 +23,26 @@ import scala.collection.mutable
  * aggregation; only the per-group tree mining itself is typed
  * (`repartitionById(...).mapPartitions`), which is genuinely imperative.
  *
- * Pipeline:
- *  1. L1 pass: `explode -> groupBy(item).count -> HAVING count >= minCount`
- *     (map-side partial agg for free) -> collect the (small, <= #distinct
- *     frequent items) list and rank it on the driver by (freq desc, item
- *     asc) in Spark's string order ([[FPGrowth.rankOrder]]): a distributed
- *     `orderBy` would add a range-sampling job and an exchange.
+ * Pipeline (five Spark jobs under AQE):
+ *  1. Input pass, one job: build the input's cache and count its rows
+ *     from the cached batches (`GraftShims.buildCache`). A query over the
+ *     unbuilt cache (`input.count()`) ran three: AQE builds the cache in a
+ *     `TableCacheQueryStage` job of its own before the count's two.
+ *     L1 pass, two jobs: `explode -> groupBy(item).count -> HAVING count
+ *     >= minCount` (map-side partial agg for free) -> collect the (small,
+ *     <= #distinct frequent items) list, keys as the bytes L1 grouped on,
+ *     and rank it on the driver by (freq desc, item asc) in Spark's string
+ *     order ([[FPGrowth.rankOrder]]): a distributed `orderBy` would add a
+ *     range-sampling job and an exchange.
  *  2. Broadcast rank dictionary + rank->group map ([[ItemGroups]]).
- *  3. Conditional transactions: typed flatMap emitting per transaction at
- *     most one (groupId, rank-prefix) per distinct group — the PFP shuffle
- *     dedup trick (`pfp/FPGrowthCore.scala:121-140`). Shuffled as packed
- *     Int arrays (Tungsten), far cheaper than serialized tree graphs.
+ *  3. Conditional transactions ([[FPGrowth.condTransactions]]), the map
+ *     side of one job: read straight off the cached `InternalRow`s, each
+ *     item's `UTF8String` looked up in the byte-keyed rank dictionary, and
+ *     emit per transaction at most one (groupId, rank-prefix) per distinct
+ *     group — the PFP shuffle dedup trick (`pfp/FPGrowthCore.scala:121-140`).
+ *     Deserializing each basket to a `Seq[String]` first cost more than
+ *     the rest of the pass. Shuffled as packed Int arrays (Tungsten), far
+ *     cheaper than serialized tree graphs.
  *  4. Shuffle on the group id as the partition id, then per-group
  *     [[FPTree]] build + extract with owner-validated suffixes
  *     (exactly-once global emission, no distinct needed downstream). The
@@ -93,22 +104,31 @@ class FPGrowth private (
     val handlePersistence = input.storageLevel == StorageLevel.NONE
     if (handlePersistence) input.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val numTransactions = input.count()
+      // The input pass: build the cache and count its rows in one job
+      val numTransactions =
+        GraftShims.buildCache(input)(_.map(_.numRows.toLong).fold(0L)(_ + _))
       val minCount =
         if (minCountOverride >= 1L) minCountOverride
         else math.max(1L, math.ceil(minSupport * numTransactions).toLong)
 
-      // L1: frequent items, ranked on the driver (pipeline step 1)
-      val freqItems: Array[(String, Long)] = FPGrowth.rankOrder(input
+      // L1: frequent items, ranked on the driver (pipeline step 1). The
+      // keys come back as the bytes L1 grouped on, not decoded Strings.
+      val freqItems: Array[(UTF8String, Long)] = FPGrowth.rankOrder(input
         .select(explode(col(itemsCol)).as("item"))
         .groupBy($"item").agg(count(lit(1)).as("freq"))
         .where($"freq" >= minCount)
-        .as[(String, Long)]
-        .collect())
+        .select($"item".cast("binary"), $"freq")
+        .as[(Array[Byte], Long)]
+        .collect()
+        .map { case (bytes, freq) => (UTF8String.fromBytes(bytes), freq) })
+      val itemNames: Array[String] = freqItems.map { case (item, _) =>
+        if (item == null) null else item.toString
+      }
 
       val numParts =
         if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-      val rankOf: Map[String, Int] = freqItems.iterator.map(_._1).zipWithIndex.toMap
+      val rankOf = new java.util.HashMap[UTF8String, Integer]
+      freqItems.iterator.zipWithIndex.foreach { case ((item, _), r) => rankOf.put(item, r) }
       val groupOf: Array[Int] =
         if (balanced) ItemGroups.balanced(numParts, freqItems.length)
         else ItemGroups.hashed(numParts, freqItems.length)
@@ -116,19 +136,18 @@ class FPGrowth private (
       val sc = spark.sparkContext
       val bcRank = sc.broadcast(rankOf)
       val bcGroup = sc.broadcast(groupOf)
-      val bcItems = sc.broadcast(freqItems.map(_._1))
+      val bcItems = sc.broadcast(itemNames)
 
-      // Group ids are 0 until numParts, so the id IS the partition id:
-      // group g is mined by task g and the LPT packing reaches the
-      // executors (a hash shuffle on the id collides groups onto shared
-      // partitions).
-      val freqItemsets: DataFrame = input
-        .as[Seq[String]]
-        .mapPartitions { it =>
-          val rank = bcRank.value
-          val group = bcGroup.value
-          it.flatMap(txn => FPGrowth.condTransactions(txn, rank, group))
-        }
+      // Conditional transactions straight off the cached rows (pipeline
+      // step 3). Group ids are 0 until numParts, so the id IS the
+      // partition id: group g is mined by task g and the LPT packing
+      // reaches the executors (a hash shuffle on the id collides groups
+      // onto shared partitions).
+      val condTransactions = input.queryExecution.toRdd.mapPartitions { rows =>
+        FPGrowth.condTransactions[ArrayData, UTF8String](rows.map(_.getArray(0)),
+          _.numElements(), _.getUTF8String(_), bcRank.value, bcGroup.value)
+      }
+      val freqItemsets: DataFrame = spark.createDataset(condTransactions)
         .repartitionById(numParts, col("_1"))
         .mapPartitions { it =>
           val dict = bcItems.value
@@ -137,11 +156,12 @@ class FPGrowth private (
         }
         .toDF("items", "freq")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      try freqItemsets.count() // materialize before releasing the input
+      // Materialize before releasing the input: the build is the mining stage
+      try GraftShims.buildCache(freqItemsets)(_.count())
       catch { case e: Throwable => freqItemsets.unpersist(); throw e }
 
-      val itemSupport: Map[String, Double] =
-        freqItems.iterator.map { case (i, c) => i -> c.toDouble / numTransactions }.toMap
+      val itemSupport: Map[String, Double] = itemNames.iterator.zip(freqItems.iterator)
+        .map { case (name, (_, c)) => name -> c.toDouble / numTransactions }.toMap
 
       new FPGrowthModel(freqItemsets, itemSupport, numTransactions,
         itemsCol, "prediction", minConfidence)
@@ -160,55 +180,91 @@ object FPGrowth {
    * `String.compareTo`'s UTF-16 order, which puts a supplementary-plane
    * character (a surrogate pair) before U+E000..U+FFFF.
    */
-  private[fpm] def rankOrder(freqItems: Array[(String, Long)]): Array[(String, Long)] = {
+  private[fpm] def rankOrder(freqItems: Array[(UTF8String, Long)]): Array[(UTF8String, Long)] = {
     val utf8Order: Ordering[UTF8String] = (a, b) => a.binaryCompare(b)
-    freqItems.sortBy { case (item, freq) => (-freq, Option(item).map(UTF8String.fromString)) }(
+    freqItems.sortBy { case (item, freq) => (-freq, Option(item)) }(
       Ordering.Tuple2(Ordering.Long, Ordering.Option(utf8Order)))
   }
 
   /**
-   * Per-transaction conditional transactions: filter to frequent items, map
-   * to ranks, sort ascending, and — walking from the full prefix down —
-   * emit each prefix `ranks[0..i]` the first time partition
-   * `group(ranks(i))` is seen, so each target group receives exactly one
-   * (longest) projection of the transaction. Semantics of
+   * The conditional-transaction kernel over one partition of baskets. Per
+   * basket: map its items to ranks, sort them ascending and — walking from
+   * the full prefix down — emit each prefix `ranks[0..j]` the first time
+   * group `groupOf(ranks(j))` is seen, so each target group receives
+   * exactly one (longest) projection of the basket. Semantics of
    * `pfp/FPGrowthCore.scala:121-140`.
    *
+   * A basket is read through `size` and `item`, so the engine looks its
+   * cached rows' `UTF8String`s up in place (`rankOf` keyed by their
+   * bytes) and the RDD shim reads its arrays. A null item is an ordinary
+   * item. The uniqueness set, the sort buffer and the group stamps are
+   * reused across the partition; only the emitted prefixes are allocated.
+   *
    * Also enforces the reference's uniqueness invariant
-   * (`pfp/FPGrowthCore.scala:75-80`): duplicate items in a transaction
-   * are an error.
+   * (`pfp/FPGrowthCore.scala:75-80`) on the RAW basket, as the reference
+   * validates before the frequency filter: a duplicate of an INFREQUENT
+   * item (["a","a","z"] with "a" rare) is still an error.
    */
-  private[graft] def condTransactions[Item](
-      txn: collection.Seq[Item],
-      rankOf: Map[Item, Int],
-      groupOf: Array[Int]): Iterator[(Int, Array[Int])] = {
-    // The uniqueness invariant holds on the RAW transaction — matching the
-    // reference, which validates before the frequency filter, so a
-    // duplicate of an INFREQUENT item (["a","a","z"] with "a" rare) is
-    // still an error rather than silently passing.
-    val seenItems = new java.util.HashSet[Item](math.max(8, txn.size * 2))
-    txn.foreach { item =>
-      if (!seenItems.add(item)) {
-        throw new IllegalArgumentException(
-          s"Items in a transaction must be unique but got ${txn.mkString("[", ",", "]")}")
-      }
-    }
-    val ranks = txn.iterator.flatMap(rankOf.get).toArray
-    java.util.Arrays.sort(ranks)
-    if (ranks.isEmpty) Iterator.empty
-    else {
-      val out = mutable.ArrayBuffer.empty[(Int, Array[Int])]
-      val seen = mutable.BitSet.empty
-      var j = ranks.length - 1
-      while (j >= 0) {
-        val g = groupOf(ranks(j))
-        if (!seen.contains(g)) {
-          seen += g
-          out += ((g, java.util.Arrays.copyOfRange(ranks, 0, j + 1)))
+  private[graft] def condTransactions[B, Item](
+      baskets: Iterator[B],
+      size: B => Int,
+      item: (B, Int) => Item,
+      rankOf: java.util.Map[Item, Integer],
+      groupOf: Array[Int]): Iterator[(Int, Array[Int])] =
+    new CondTransactions(baskets, size, item, rankOf, groupOf)
+
+  private final class CondTransactions[B, Item](
+      baskets: Iterator[B],
+      size: B => Int,
+      item: (B, Int) => Item,
+      rankOf: java.util.Map[Item, Integer],
+      groupOf: Array[Int]) extends AbstractIterator[(Int, Array[Int])] {
+    private val seen = new java.util.HashSet[Item]
+    private var ranks = new Array[Int](16)
+    /** stamp(g) == basket: group g already has this basket's prefix */
+    private val stamp = new Array[Int](if (groupOf.isEmpty) 0 else groupOf.max + 1)
+    private var basket = 0
+    /** the end of the next prefix to emit; -1 when the basket is done */
+    private var j = -1
+
+    private def load(b: B): Unit = {
+      val n = size(b)
+      if (ranks.length < n) ranks = new Array[Int](math.max(n, 2 * ranks.length))
+      seen.clear()
+      var len = 0
+      var i = 0
+      while (i < n) {
+        val x = item(b, i)
+        if (!seen.add(x)) {
+          throw new IllegalArgumentException("Items in a transaction must be unique but got " +
+            (0 until n).map(item(b, _)).mkString("[", ",", "]"))
         }
-        j -= 1
+        val r = rankOf.get(x)
+        if (r != null) { ranks(len) = r; len += 1 }
+        i += 1
       }
-      out.iterator
+      java.util.Arrays.sort(ranks, 0, len)
+      if (basket == Int.MaxValue) { java.util.Arrays.fill(stamp, 0); basket = 0 }
+      basket += 1
+      j = len - 1
+    }
+
+    private def skipServed(): Unit =
+      while (j >= 0 && stamp(groupOf(ranks(j))) == basket) j -= 1
+
+    def hasNext: Boolean = {
+      skipServed()
+      while (j < 0 && baskets.hasNext) { load(baskets.next()); skipServed() }
+      j >= 0
+    }
+
+    def next(): (Int, Array[Int]) = {
+      if (!hasNext) throw new NoSuchElementException("no more conditional transactions")
+      val g = groupOf(ranks(j))
+      stamp(g) = basket
+      val out = (g, java.util.Arrays.copyOfRange(ranks, 0, j + 1))
+      j -= 1
+      out
     }
   }
 

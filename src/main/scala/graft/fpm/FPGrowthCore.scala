@@ -63,7 +63,8 @@ class FPGrowthCore[Item: ClassTag] private (
 
     val itemSupport = freqItems.iterator
       .map { case (i, c) => i -> c.toDouble / count }.toMap
-    val rankOf: Map[Item, Int] = freqItems.iterator.map(_._1).zipWithIndex.toMap
+    val rankOf = new java.util.HashMap[Item, Integer]
+    freqItems.iterator.zipWithIndex.foreach { case ((item, _), r) => rankOf.put(item, r) }
     val bcRank = sc.broadcast(rankOf)
     val bcGroup = sc.broadcast(ItemGroups.balanced(numParts, freqItems.length))
     val bcItems = sc.broadcast(freqItems.map(_._1))
@@ -72,9 +73,7 @@ class FPGrowthCore[Item: ClassTag] private (
     // to itself, so group g is mined by partition g.
     val itemsets = data
       .mapPartitions { it =>
-        val rank = bcRank.value
-        val group = bcGroup.value
-        it.flatMap(txn => FPGrowth.condTransactions(txn, rank, group))
+        FPGrowth.condTransactions[Array[Item], Item](it, _.length, _(_), bcRank.value, bcGroup.value)
       }
       .partitionBy(new HashPartitioner(numParts))
       .mapPartitions { it =>

@@ -12,6 +12,24 @@ object GraftShims {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /**
+   * Build a persisted Dataset's cache in one job: runs `action` on the
+   * cache's own batch RDD (`CachedRDDBuilder.cachedColumnBuffers`) inside
+   * one SQL execution of `ds`. A query over a cache not yet built reads it
+   * through AQE's `TableCacheQueryStage`, which builds it as a job of its
+   * own before the query's jobs run. An action that computes every
+   * partition leaves the cache built, whoever persisted `ds`.
+   */
+  def buildCache[T](ds: Dataset[_])(
+      action: org.apache.spark.rdd.RDD[org.apache.spark.sql.columnar.CachedBatch] => T): T = {
+    val cds = ds.asInstanceOf[classic.Dataset[_]]
+    val cached = cds.sparkSession.sharedState.cacheManager.lookupCachedData(cds)
+      .getOrElse(throw new IllegalArgumentException("buildCache: the Dataset is not persisted"))
+    execution.SQLExecution.withNewExecutionId(cds.queryExecution, Some("buildCache")) {
+      action(cached.cachedRepresentation.cacheBuilder.cachedColumnBuffers)
+    }
+  }
+
   /** Wrap a custom logical plan as a DataFrame (Spark 4 moved
     * `Dataset.ofRows` behind the classic implementation). */
   def ofRows(spark: SparkSession,

@@ -50,6 +50,22 @@ class EdgeCasesSpec extends AnyFunSuite {
     val m = new FPGrowth().setMinSupport(0.5).fit(data)
     assert(m.numTransactions == 2) // null row dropped before counting
     assert(m.itemSupport("a") == 1.0)
+
+    // a null element is an ordinary item, frequent or not
+    def bruteForce(txns: Seq[Seq[String]], minCount: Long): Map[Set[String], Long] =
+      txns.flatMap(_.toSet.subsets().filter(_.nonEmpty)).groupBy(identity)
+        .map { case (s, occ) => s -> occ.size.toLong }.filter(_._2 >= minCount)
+    val frequentNull = Seq(Seq("a", null), Seq(null, "b"), Seq("a", "b", null), Seq("a"))
+    val rareNull = Seq(Seq("a", "b"), Seq("a", null), Seq("a", "b"))
+    for (txns <- Seq(frequentNull, rareNull)) {
+      val withNulls = (txns.map(Option(_)) :+ None).toDF("items")
+      val got = new FPGrowth().setMinSupport(0.5).fit(withNulls)
+        .freqItemsets.as[(Seq[String], Long)].collect()
+        .map { case (i, f) => i.toSet -> f }.toMap
+      val minCount = math.ceil(0.5 * txns.size).toLong
+      assert(got == bruteForce(txns, minCount), txns)
+      assert(got.contains(Set[String](null)) == (txns.count(_.contains(null)) >= minCount))
+    }
   }
 
   test("single transaction, numPartitions larger than items") {
@@ -72,6 +88,14 @@ class EdgeCasesSpec extends AnyFunSuite {
       if (t == null) Nil else t :: chain(t.getCause)
     assert(chain(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
       c.getMessage.contains("unique")), s"unexpected failure: $e")
+
+    // a duplicated null is a duplicate too
+    val nulls = df(Seq(Seq("z", "y"), Seq("z", "y"), Seq("z", "y"), Seq(null, null, "z")))
+    val eNull = intercept[org.apache.spark.SparkException] {
+      new FPGrowth().setMinSupport(0.6).fit(nulls).freqItemsets.count()
+    }
+    assert(chain(eNull).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("unique")), s"unexpected failure: $eNull")
   }
 
   test("Apriori on empty and degenerate inputs") {

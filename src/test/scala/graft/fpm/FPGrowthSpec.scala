@@ -1,6 +1,6 @@
 package graft.fpm
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{explode, spark_partition_id}
 import org.apache.spark.storage.StorageLevel
@@ -67,6 +67,14 @@ class FPGrowthSpec extends AnyFunSuite {
         assert(got == expected, s"aqe=$aqe balanced=$balanced parts=$parts")
       }
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    // the caller persisted the fit's own input plan: the fit reads that
+    // cache and leaves it in place
+    val callerCached = df.select($"items").where($"items".isNotNull)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      assert(itemsetsOf(new FPGrowth().setMinSupport(0.05).fit(df)) == expected)
+      assert(callerCached.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally callerCached.unpersist()
   }
 
   test("balanced groups: every non-empty group is mined in its own task") {
@@ -213,6 +221,43 @@ class FPGrowthSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a fit runs at most five jobs, and its one mining stage reads the shuffle") {
+    val sc = spark.sparkContext
+    val group = "fit-job-shape"
+    // jobs of this thread's group only: other suites may share the context
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fitStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(fitStages.add(_))
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        stages.put(i.stageId, (i.name, i.taskMetrics.shuffleReadMetrics.recordsRead))
+      }
+    }
+    // LiveListenerBus is private[spark] to Scala but public in bytecode
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      new FPGrowth().setMinSupport(0.4).fit(trainDF)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 5, s"${jobs.get} fit jobs")
+    val mining = fitStages.toArray.map(_.asInstanceOf[Int]).flatMap(id => Option(stages.get(id)))
+      .filter(_._1.startsWith("count at FPGrowth"))
+    assert(mining.length == 1, mining.toSeq)
+    assert(mining.head._2 > 0, "the mining stage reads no shuffle")
   }
 
   test("duplicate items in a transaction are rejected") {

@@ -82,10 +82,13 @@ class FpmPropertiesSpec extends AnyFunSuite {
     check("condtxn")(forAll(txnsGen, Gen.choose(1, 5)) { (txns, groups) =>
       val numItems = txns.flatten.foldLeft(0)(math.max) + 1
       val rankOf = (0 until numItems).map(i => i.toString -> i).toMap
+      val rankMap = new java.util.HashMap[String, Integer]
+      rankOf.foreach { case (i, r) => rankMap.put(i, r) }
       val groupOf = ItemGroups.hashed(groups, numItems)
       txns.forall { t =>
         val txn = t.distinct.map(_.toString)
-        val out = FPGrowth.condTransactions(txn, rankOf, groupOf).toList
+        val out = FPGrowth.condTransactions[Array[String], String](
+          Iterator.single(txn.toArray), _.length, _(_), rankMap, groupOf).toList
         val targets = out.map(_._1)
         // one entry per distinct group among the txn's items
         targets.distinct == targets &&
