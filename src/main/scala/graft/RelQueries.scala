@@ -1900,7 +1900,7 @@ object RelQueries {
    * table exists FOR: for every user, fire each q186 rule whose
    * antecedent pattern is contained in the user's event sequence
    * (greedy subsequence matching, [[graft.fpm.SequentialPatterns
-   * .containsPattern]]) and whose consequent the user has NOT yet
+   * .matchEnd]]) and whose consequent the user has NOT yet
    * done; emit the fired consequents best-lift-first (ties by
    * consequent asc), first-occurrence-deduplicated per consequent —
    * exactly q05's rule-probe semantics with "basket ∋ item" replaced
@@ -1916,10 +1916,11 @@ object RelQueries {
    *
    * Scale shape: ONE shuffle builds the per-user sequences (the
    * projected-database assumption); the rule table is output-bounded
-   * metadata shipped as a plan literal in fire order; per-row work is
-   * `|rules| x |seq|` greedy folds + one dedup fold — no join, no
-   * second corpus pass. The declared row derives its rules from the
-   * memoized q121 mine (the artifact-store convention).
+   * metadata that rides in fire order with one typed map over the
+   * sequences; per-user work is at most `|rules|` greedy scans, each
+   * stopping at its match — no join, no second corpus pass. The
+   * declared row derives its rules from the memoized q121 mine (the
+   * artifact-store convention).
    */
   def sequentialPredict(spark: SparkSession, dir: String): DataFrame =
     predictUsingPatterns(spark, dir, sequentialPatterns(spark, dir))
@@ -1966,60 +1967,46 @@ object RelQueries {
         .as[(String, String, Double)].collect().toSeq
         .map { case (a, c, l) => (a.split("->").toSeq, c, l) }
         .sortBy { case (_, c, l) => (-l, c) }
-    val seqs = seqEvents(spark, dir).where(col("event_type").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_list(struct(col("tsu").as("t"),
-        col("event_id").as("i"), col("event_type").as("y")))).as("s"))
-      .select(col("user_id"), expr("transform(s, x -> x.y)").as("seq"))
-    sequencePredictFrom(seqs, rules)
+    sequencePredictFrom(graft.fpm.SequentialPatterns.sequences(
+      seqEvents(spark, dir), Seq("user_id"), "tsu", "event_id",
+      "event_type"), rules)
   }
 
   /** Core of q201 over any `(user_id, seq)` frame and FIRE-ORDERED
     * rules (lift desc, consequent asc — the caller sorts): fire each
-    * rule whose antecedent is greedily contained and whose consequent
-    * is absent, then a first-occurrence dedup fold per consequent.
-    *
-    * The containment probe SPECIALIZES per rule at expression-build
-    * time (rule antecedents are known Scala values): length 1 is one
-    * `array_contains`, length 2 is `array_position` (the greedy first
-    * occurrence) + `array_contains` over the suffix — early-exiting
-    * native array scans instead of the generic per-element struct
-    * fold, which made the first cut of this row the suite's slowest
-    * (7.4 s -> the fold walked every rule across every user's WHOLE
-    * sequence with no early exit). Longer antecedents (none are
-    * produced under the plen<=3 mining cap, but the core stays
-    * general) fall back to the greedy fold. Still zero UDFs and zero
-    * joins: the rule table is the plan. */
+    * rule whose antecedent is greedily contained
+    * ([[graft.fpm.SequentialPatterns.matchEnd]]) and whose consequent
+    * is absent, keeping each consequent's first firing. One typed map
+    * per user: the user's types and the fired consequents live in two
+    * sets reused across the partition, and a rule whose consequent is
+    * already done or fired is skipped without a scan. */
   private[graft] def sequencePredictFrom(
       seqs: DataFrame,
       rules: Seq[(Seq[String], String, Double)]): DataFrame = {
-    val sp = graft.fpm.SequentialPatterns
-    if (rules.isEmpty)
-      seqs.select(col("user_id"), lit("").as("prediction"))
-    else {
-      val picks: Seq[Column] = rules.map { case (a, c, _) =>
-        val contained =
-          if (a.length == 1) array_contains(col("seq"), a.head)
-          else if (a.length == 2) {
-            val p = array_position(col("seq"), a.head)
-            p > 0 && array_contains(
-              slice(col("seq"), (p + 1).cast("int"), size(col("seq"))),
-              a(1))
-          } else
-            sp.containsPattern(col("seq"), array(a.map(lit): _*))
-        when(contained && !array_contains(col("seq"), lit(c)), lit(c))
-          .otherwise(lit(null).cast("string"))
+    val spark = seqs.sparkSession
+    import spark.implicits._
+    val ants = rules.map(_._1.toArray).toArray
+    val cons = rules.map(_._2).toArray
+    seqs.select(col("user_id"), col("seq")).as[(Long, Array[String])]
+      .mapPartitions { it =>
+        val done = new java.util.HashSet[String]()
+        val fired = new java.util.LinkedHashSet[String]()
+        it.map { case (user, s) =>
+          done.clear()
+          fired.clear()
+          s.foreach(done.add)
+          var r = 0
+          while (r < ants.length) {
+            val c = cons(r)
+            if (!done.contains(c) && !fired.contains(c) &&
+                graft.fpm.SequentialPatterns.matchEnd(s, ants(r)) > 0)
+              fired.add(c)
+            r += 1
+          }
+          (user, String.join(", ", fired))
+        }
       }
-      // fired consequents in fire order, then the first-occurrence
-      // dedup fold — codegen'd HOFs, no UDF
-      val fired = filter(array(picks: _*), x => x.isNotNull)
-      val picked = aggregate(fired,
-        array().cast("array<string>"),
-        (acc, x) => when(array_contains(acc, x), acc)
-          .otherwise(concat(acc, array(x))))
-      seqs.select(col("user_id"),
-        array_join(picked, ", ").as("prediction"))
-    }
+      .toDF("user_id", "prediction")
   }
 
   /** q201's oracle: the q186 rule CTEs + per-user containment firing

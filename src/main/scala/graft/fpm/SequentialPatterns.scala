@@ -1,6 +1,6 @@
 package graft.fpm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,32 +21,39 @@ import org.apache.spark.storage.StorageLevel
  * the alphabet. The correctness hinge: greedy earliest matching is
  * optimal for subsequence containment, so a sequence contains `p :+ c`
  * iff `c` occurs strictly after the end of the greedy earliest match
- * of `p`. Each level is therefore one distributed pass: per
- * (sequence, frequent prefix), find the greedy match end (an
- * `aggregate` fold carrying a (cursor, index, end) struct — no UDF),
- * project the distinct types of the suffix, and count (prefix, type)
- * pairs. Candidates that never co-occur in the data are never
+ * of `p` ([[matchEnd]]). Each level is therefore one distributed pass:
+ * a typed `mapPartitions` over the cached sequences, with the frequent
+ * prefixes broadcast, emits `(prefix index, type)` for every distinct
+ * type in the suffix after each matched prefix, and one groupBy counts
+ * the pairs. Candidates that never co-occur in the data are never
  * generated, let alone counted.
+ *
+ * [[matchEnd]] is the family's one containment test: the mine above,
+ * the FUP correction pass ([[signedSupport]]) and the next-event
+ * predictor (`graft.RelQueries.sequencePredictFrom`) all call it on
+ * plain arrays. No pattern ever becomes a plan literal, so the plan is
+ * the same size whatever the number or length of the patterns.
  *
  * This replaces round-13's GSP candidate enumeration, whose level-k
  * candidate literal was `|freq(k-1)| x |F1|`-sized — alphabet-bounded,
  * fine at a 5-type events fixture, but a 10^4-type vocabulary makes
  * the level-2 literal 10^8 entries: a Catalyst expression tree that
- * large fails long before the cluster does. Here the only literal
- * shipped is the frequent-prefix list itself — OUTPUT-bounded (few by
- * the PrefixSpan premise at any useful support), not V^k.
+ * large fails long before the cluster does. Here the only state shipped
+ * is the frequent-prefix list itself — OUTPUT-bounded (few by the
+ * PrefixSpan premise at any useful support), not V^k.
  *
  * == Scale shape ==
  *
- * One shuffle builds the per-key ordered sequences (bounded per-key
- * collect — the projected-database assumption every PrefixSpan-family
- * miner makes: one key's history fits in memory). Each level is then a
- * pure projection over the cached sequences — per-row work is
- * `|freq(k-1)| x |seq|` greedy folds plus one suffix-distinct, followed
- * by one partial-aggregated groupBy whose key domain is the observed
- * (prefix, extension) pairs. Corpus size never enters a join; layer
- * results collect as support-bounded metadata (the histogram /
- * codebook discipline) and the output assembles driver-side.
+ * One shuffle builds the per-key ordered sequences ([[sequences]]: a
+ * bounded per-key collect — the projected-database assumption every
+ * PrefixSpan-family miner makes: one key's history fits in memory).
+ * Each level is then a typed pass over the cached sequences — per-row
+ * work is `|freq(k-1)|` greedy scans that stop at the match plus one
+ * suffix-distinct per matched prefix, followed by one partial-aggregated
+ * groupBy whose key domain is the observed (prefix index, extension)
+ * pairs. Corpus size never enters a join; layer results collect as
+ * support-bounded metadata (the histogram / codebook discipline) and
+ * the output assembles driver-side.
  *
  * Determinism: sequences order by the strictly-unique (time, eventId)
  * pair, so subsequence positions biject onto strict lexicographic
@@ -55,129 +62,84 @@ import org.apache.spark.storage.StorageLevel
  */
 object SequentialPatterns {
 
-  /** Test-only window onto [[greedyMatchEnd]] — the specialization
-    * contract spec pins [[matchEndLit]] against the generic fold. */
-  private[fpm] def testGreedyMatchEnd(seq: Column, pat: Column): Column =
-    greedyMatchEnd(seq, pat)
-
   /** 1-based index where the greedy earliest match of `pat` inside
-    * `seq` completes; 0 when `seq` does not contain `pat`. The fold
-    * carries (match cursor m, element index i, completion index e):
-    * greedy matching advances m on every hit while m < |pat|, and e
-    * records i the first time m reaches |pat|. */
-  private def greedyMatchEnd(seq: Column, pat: Column): Column =
-    aggregate(seq,
-      struct(lit(0).as("m"), lit(0).as("i"), lit(0).as("e")),
-      (a, x) => {
-        val hit = a.getField("m") < size(pat) &&
-          x === element_at(pat, a.getField("m") + 1)
-        val m2 = when(hit, a.getField("m") + 1).otherwise(a.getField("m"))
-        struct(m2.as("m"), (a.getField("i") + 1).as("i"),
-          when(a.getField("e") === 0 && hit && m2 === size(pat),
-            a.getField("i") + 1).otherwise(a.getField("e")).as("e"))
-      },
-      a => a.getField("e"))
-
-  /** Whether `seq` contains `pat` as a (not necessarily contiguous)
-    * subsequence — greedy earliest matching, see [[greedyMatchEnd]].
-    * Public for the transform surface (q201's rule firing test). */
-  def containsPattern(seq: Column, pat: Column): Column =
-    greedyMatchEnd(seq, pat) > 0
-
-  /** Prefixes per mine LEVEL up to which [[matchEndLit]] specialization
-    * is used in [[frequentSequences]]' extension layer; above it the
-    * generic [[greedyMatchEnd]] fold keeps the expression tree bounded
-    * (a plan literal of tens of thousands of chained natives would cost
-    * more to codegen than it saves — the same cap discipline as the
-    * q201 probe). The specialized arm applies ONLY where a corpus-sized
-    * pass amortizes its plan cost: round 17 measured the per-call
-    * analysis+codegen of ~155 chained-native trees at ~1.5-2 s — a win
-    * inside the mine (one pass per level over the whole corpus, native
-    * early-exit scans per row) and a 2-3.5x LOSS in the per-batch
-    * [[signedSupport]] path, whose inputs are delta-sized by design
-    * (the round-16 regression, adjudicated in OPTIMIZATION_r17.md).
-    * Env-overridable for adjudication experiments; the local default is
-    * also the production default — the bound is a plan-size budget, not
-    * a data-size tunable. */
-  private[fpm] val SpecializeCap =
-    sys.env.get("GRAFT_SPECIALIZE_CAP").map(_.toInt).getOrElse(1024)
-
-  /** Max pattern LENGTH for the specialized arm: [[matchEndLit]]
-    * references `prev` three times per chained step, so its tree grows
-    * ~3^L in pattern length L — the count cap alone does not bound the
-    * plan (a length-12 artifact times 1024 patterns would blow up
-    * analysis). Mines at the declared maxLen (3-4) specialize; beyond
-    * this the generic fold arm runs. */
-  private[fpm] val SpecializeMaxPatLen = 6
-
-  /** [[greedyMatchEnd]] SPECIALIZED at expression-build time for a
-    * pattern known driver-side (the q201 probe discipline generalized
-    * to any literal pattern): greedy earliest matching is a chain of
-    * first-occurrence scans, so each step is one early-exiting native
-    * `array_position` over the suffix after the previous step's match
-    * — whole-stage-codegen'd, no per-element struct allocation, exits
-    * at the hit instead of folding the whole sequence. Returns the
-    * identical 1-based completion index, 0 on no match (spec-pinned
-    * equal to the generic fold on random inputs). */
-  private[fpm] def matchEndLit(seq: Column, pat: Seq[String]): Column = {
-    require(pat.nonEmpty, "matchEndLit needs a nonempty pattern")
-    pat.tail.foldLeft(array_position(seq, lit(pat.head))) { (prev, item) =>
-      // slice length over-shoots (clamped) — cheaper than size-prev
-      val rel = array_position(
-        slice(seq, (prev + 1).cast("int"), size(seq)), lit(item))
-      when(prev > 0 && rel > 0, prev + rel).otherwise(lit(0L))
+    * `seq` completes; 0 when `seq` does not contain `pat` or `pat` is
+    * empty. Greedy matching advances the pattern cursor on every hit,
+    * so the scan stops at the first completion. */
+  def matchEnd(seq: Array[String], pat: Array[String]): Int = {
+    if (pat.isEmpty) return 0
+    var m = 0
+    var i = 0
+    while (i < seq.length) {
+      if (seq(i) == pat(m)) {
+        m += 1
+        if (m == pat.length) return i + 1
+      }
+      i += 1
     }
+    0
   }
 
+  /** Per-key ordered event sequences: `keyCols` plus `seq`, each key's
+    * non-null `typeCol` values ordered by the strictly-unique (time,
+    * event id) pair. One shuffle. */
+  def sequences(
+      events: DataFrame, keyCols: Seq[String], tsCol: String,
+      idCol: String, typeCol: String): DataFrame =
+    events.where(col(typeCol).isNotNull)
+      .groupBy(keyCols.map(col): _*)
+      .agg(sort_array(collect_list(struct(col(tsCol).as("t"),
+        col(idCol).as("i"), col(typeCol).as("y")))).as("s"))
+      .select(keyCols.map(col) :+
+        expr("transform(s, x -> x.y)").as("seq"): _*)
+
   /**
-   * Signed containment counts of the candidate `patterns` —
-   * `(pattern, support)` with the `"a->b"` string key and `support =
-   * Σ sign × (keys whose sequence on that side contains the pattern)`,
-   * omitting candidates no side contains. ONE distributed job for any
-   * number of sides: each side's events are tagged with its index and
-   * sign and unioned (no union for a single side), each (key, side)
-   * builds its ordered sequence in one shuffle, and one aggregation sums
-   * the signs. The candidate list ships as a plan literal (caller-
-   * bounded — artifact-sized at the fold call sites); containment is
-   * the greedy fold. Lazy — the returned plan executes when the caller
-   * acts on it.
-   *
-   * Deliberately the GENERIC fold arm, never the [[matchEndLit]]
-   * specialization: every lifecycle caller hands this delta-sized
-   * input (added / touched / erased keys only), where round 17
-   * measured the specialized arm's per-call plan analysis+codegen
-   * (~1.5-2 s for an artifact-sized candidate list) at 2-3.5x the
-   * whole query — the round-16 driver regression. The specialization
-   * earns its plan cost only on corpus-sized passes (the mine's
-   * extension layer, q201's literal probes).
+   * Signed containment counts of the candidate `patterns`: entry j is
+   * `Σ sign × (keys whose sequence on that side contains patterns(j))`.
+   * ONE distributed job for any number of sides: each side's events are
+   * tagged with its index and sign and unioned (no union for a single
+   * side), each (key, side) builds its ordered sequence in one shuffle,
+   * and a typed pass tests every broadcast candidate with [[matchEnd]],
+   * summing signs into one `Long` array per partition. The driver adds
+   * the partitions' arrays.
    */
-  private[fpm] def signedSupport(
+  private def signedSupport(
       sides: Seq[(DataFrame, Int)], keyCol: String, tsCol: String,
       idCol: String, typeCol: String,
-      patterns: Seq[Seq[String]]): DataFrame = {
-    val seqs = sides.zipWithIndex.map { case ((ev, sign), j) =>
-      ev.select(col(keyCol).as("k"), col(tsCol).as("t"),
-          col(idCol).as("i"), col(typeCol).as("y"),
-          lit(j).as("__side"), lit(sign.toLong).as("__sign"))
-        .where(col("y").isNotNull)
+      patterns: Array[Array[String]]): Array[Long] = {
+    val tagged = sides.zipWithIndex.map { case ((ev, sign), j) =>
+      ev.select(col(keyCol), col(tsCol), col(idCol), col(typeCol),
+        lit(j).as("__side"), lit(sign.toLong).as("__sign"))
     }.reduce(_ unionByName _)
-      .groupBy(col("k"), col("__side"), col("__sign"))
-      .agg(sort_array(collect_list(struct(col("t"), col("i"),
-        col("y")))).as("s"))
-      .select(col("__sign"), expr("transform(s, x -> x.y)").as("seq"))
-    val patLit = array(patterns.map(p => array(p.map(lit): _*)): _*)
-    seqs
-      .select(col("__sign"), explode(patLit).as("pat"), col("seq"))
-      .where(greedyMatchEnd(col("seq"), col("pat")) > 0)
-      .groupBy(array_join(col("pat"), "->").as("pattern"))
-      .agg(sum(col("__sign")).as("support"))
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    val pats = spark.sparkContext.broadcast(patterns)
+    try {
+      val parts = sequences(tagged, Seq(keyCol, "__side", "__sign"),
+          tsCol, idCol, typeCol)
+        .select(col("__sign"), col("seq")).as[(Long, Array[String])]
+        .mapPartitions { it =>
+          val ps = pats.value
+          val sums = new Array[Long](ps.length)
+          it.foreach { case (sign, s) =>
+            var j = 0
+            while (j < ps.length) {
+              if (matchEnd(s, ps(j)) > 0) sums(j) += sign
+              j += 1
+            }
+          }
+          Iterator.single(sums)
+        }
+        .collect()
+      Array.tabulate(patterns.length)(j => parts.iterator.map(_(j)).sum)
+    } finally pats.destroy()
   }
 
   /** This family's [[Fup.fold]]: `stored` `(pattern, plen, support)`
     * plus the signed containment counts of its patterns over `sides` —
     * one correction job, none when the artifact is empty (empty
-    * patterns are dropped and duplicates collapse before the plan
-    * literal is built). */
+    * patterns are dropped and duplicates collapse before the
+    * candidates are broadcast). */
   private def signedFold(
       stored: DataFrame, sides: Seq[(DataFrame, Int)], keyCol: String,
       tsCol: String, idCol: String, typeCol: String): DataFrame =
@@ -185,8 +147,8 @@ object SequentialPatterns {
         "pattern", "support") { keys =>
       val pats = keys.map(_.split("->").toSeq).filter(_.nonEmpty).distinct
       if (pats.isEmpty) Map.empty
-      else signedSupport(sides, keyCol, tsCol, idCol, typeCol, pats)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      else pats.map(_.mkString("->")).zip(signedSupport(sides, keyCol,
+        tsCol, idCol, typeCol, pats.map(_.toArray).toArray)).toMap
     }
 
   /**
@@ -422,11 +384,9 @@ object SequentialPatterns {
       s"support fraction must be a nonnegative rational: " +
         s"$minSupportNum/$minSupportDen")
     val spark = events.sparkSession
-    val seqs = events.where(col(typeCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(col(tsCol).as("t"),
-        col(idCol).as("i"), col(typeCol).as("y")))).as("s"))
-      .select(expr("transform(s, x -> x.y)").as("seq"))
+    import spark.implicits._
+    val seqs = sequences(events, Seq(keyCol), tsCol, idCol, typeCol)
+      .select(col("seq")).as[Array[String]]
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // One long of metadata: the key count that anchors the threshold.
@@ -434,47 +394,31 @@ object SequentialPatterns {
       val minCount = (numKeys * minSupportNum + minSupportDen - 1) /
         minSupportDen
 
-      // One distributed pass per level: frequent prefixes ship as an
-      // output-bounded plan literal; extensions are PROJECTED from the
-      // data (suffix after the greedy match), never enumerated.
+      // One distributed pass per level: the frequent prefixes are
+      // broadcast; extensions are PROJECTED from the data (the distinct
+      // types after each prefix's greedy match), never enumerated.
       def extendLayer(freqPrev: Seq[List[String]]): Seq[(List[String], Long)] =
         if (freqPrev.isEmpty) Nil
-        else if (freqPrev.length <= SpecializeCap &&
-            freqPrev.iterator.map(_.length).max <= SpecializeMaxPatLen) {
-          // Specialized arm (the [[matchEndLit]] discipline): compute
-          // every prefix's distinct suffix types in ONE projection per
-          // sequence row — each prefix costs an early-exiting native
-          // match + one guarded slice/distinct — then posexplode the
-          // per-prefix arrays. The exchange carries (int index, type)
-          // instead of the fold arm's (full pattern array, type), and
-          // no generator row ever copies the sequence itself.
-          val exts = array(freqPrev.map { p =>
-            val e = matchEndLit(col("seq"), p)
-            when(e > 0, array_distinct(
-              slice(col("seq"), (e + 1).cast("int"), size(col("seq")))))
-              .otherwise(lit(null).cast("array<string>"))
-          }: _*)
-          seqs.select(posexplode(exts).as(Seq("j", "cs")))
-            .where(col("cs").isNotNull)
-            .select(col("j"), explode(col("cs")).as("c"))
+        else {
+          val prefixes = freqPrev.map(_.toArray).toArray
+          val bc = spark.sparkContext.broadcast(prefixes)
+          try seqs.mapPartitions { it =>
+              val ps = bc.value
+              it.flatMap { s =>
+                ps.indices.iterator.flatMap { j =>
+                  val e = matchEnd(s, ps(j))
+                  if (e == 0) Iterator.empty
+                  else s.iterator.drop(e).distinct.map(c => (j, c))
+                }
+              }
+            }
+            .toDF("j", "c")
             .groupBy(col("j"), col("c")).agg(count(lit(1)).as("support"))
             .where(col("support") >= minCount)
             .collect()
-            .map(r => (freqPrev(r.getInt(0)) :+ r.getString(1),
+            .map(r => (prefixes(r.getInt(0)).toList :+ r.getString(1),
               r.getLong(2))).toSeq
-        } else {
-          val patLit = array(freqPrev.map(p => array(p.map(lit): _*)): _*)
-          seqs.select(col("seq"), explode(patLit).as("pat"))
-            .withColumn("e", greedyMatchEnd(col("seq"), col("pat")))
-            .where(col("e") > 0)
-            .select(col("pat"), explode(array_distinct(
-              slice(col("seq"), col("e") + 1,
-                size(col("seq")) - col("e")))).as("c"))
-            .groupBy(col("pat"), col("c")).agg(count(lit(1)).as("support"))
-            .where(col("support") >= minCount)
-            .collect()
-            .map(r => (r.getSeq[String](0).toList :+ r.getString(1),
-              r.getLong(2))).toSeq
+          finally bc.destroy()
         }
 
       // L1: one vocabulary-sized aggregation (the only alphabet-sized
@@ -493,7 +437,6 @@ object SequentialPatterns {
         freqK = lk.map(_._1)
         k += 1
       }
-      import spark.implicits._
       layers.reverse.flatten
         .map { case (p, s) => (p.mkString("->"), p.length, s) }
         .toDF("pattern", "plen", "support")

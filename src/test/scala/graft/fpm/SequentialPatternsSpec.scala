@@ -25,6 +25,14 @@ class SequentialPatternsSpec extends AnyFunSuite {
       .map { case (p, l, s) => p -> (l, s) }.toMap
   }
 
+  /** Whether `s` contains `p` as a (not necessarily contiguous)
+    * subsequence. */
+  private def contains(s: Seq[String], p: Seq[String]): Boolean = {
+    var m = 0
+    for (x <- s if m < p.length) if (x == p(m)) m += 1
+    m == p.length
+  }
+
   /** Driver-side brute force: enumerate every pattern over the alphabet
     * up to maxLen, count containment per user sequence, threshold. */
   private def bruteForce(
@@ -35,11 +43,6 @@ class SequentialPatternsSpec extends AnyFunSuite {
     }.toSeq
     val minCount = (seqs.size * num + den - 1) / den
     val alphabet = rows.map(_._4).distinct.sorted
-    def contains(s: Seq[String], p: Seq[String]): Boolean = {
-      var m = 0
-      for (x <- s if m < p.length) if (x == p(m)) m += 1
-      m == p.length
-    }
     def patterns(k: Int): Seq[List[String]] =
       if (k == 0) Seq(Nil)
       else for (p <- patterns(k - 1); c <- alphabet) yield c :: p
@@ -86,30 +89,83 @@ class SequentialPatternsSpec extends AnyFunSuite {
     }
   }
 
-  test("matchEndLit == greedyMatchEnd on random sequences (specialization contract)") {
-    // the literal-pattern native chain must return the IDENTICAL
-    // 1-based greedy completion index as the generic fold — including
-    // repeated symbols, prefix-only partial matches, and the empty
-    // sequence — because extendLayer picks an arm by
-    // pattern-list size alone, never by data
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
+  test("matchEnd == brute-force containment on random sequences") {
+    // the 1-based end is the shortest prefix of the sequence that
+    // contains the pattern; 0 for no match and for the empty pattern
+    def want(s: Seq[String], p: Seq[String]): Int =
+      if (p.isEmpty) 0
+      else (1 to s.length).find(n => contains(s.take(n), p)).getOrElse(0)
     val rnd = new scala.util.Random(29)
     val types = Seq("v", "c", "p", "e")
     val seqs = (1 to 300).map(_ =>
       Seq.fill(rnd.nextInt(12))(types(rnd.nextInt(types.size)))) :+
       Seq.empty[String]
     val pats = (1 to 25).map(_ =>
-      Seq.fill(1 + rnd.nextInt(4))(types(rnd.nextInt(types.size))))
-    val df = seqs.toDF("seq")
-    pats.foreach { p =>
-      val patCol = array(p.map(lit): _*)
-      val diverged = df.where(
-        SequentialPatterns.matchEndLit(col("seq"), p) =!=
-          SequentialPatterns.testGreedyMatchEnd(col("seq"), patCol))
-        .count()
-      assert(diverged == 0L, s"pattern $p diverged on $diverged sequences")
+      Seq.fill(1 + rnd.nextInt(4))(types(rnd.nextInt(types.size)))) :+
+      Seq.empty[String]
+    for (s <- seqs; p <- pats) {
+      val got = SequentialPatterns.matchEnd(s.toArray, p.toArray)
+      assert(got == want(s, p), s"matchEnd($s, $p)")
     }
+    // repeated symbols; a prefix-only partial match; empty inputs
+    assert(SequentialPatterns.matchEnd(Array("a", "b", "a"), Array("a", "a")) == 3)
+    assert(SequentialPatterns.matchEnd(Array("a", "b"), Array("a", "c")) == 0)
+    assert(SequentialPatterns.matchEnd(Array(), Array()) == 0)
+    assert(SequentialPatterns.matchEnd(Array(), Array("a")) == 0)
+  }
+
+  test("mine and each fold equal the brute force at 1 and 7 shuffle partitions") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(59)
+    val types = Seq("v", "c", "p", "e")
+    val rows = for {
+      u <- 1L to 40L
+      k <- 1 to (2 + rnd.nextInt(8))
+    } yield (u, k.toLong, u * 100 + k, types(rnd.nextInt(types.size)))
+    type Rows = Seq[(Long, Long, Long, String)]
+    def users(rs: Rows) = rs.map(_._1).distinct.size.toLong
+    def df(rs: Rows) = rs.toDF("u", "t", "i", "y")
+    def stored(rs: Rows, minCount: Long) = SequentialPatterns.frequentSequences(
+      df(rs), "u", "t", "i", "y", minCount, users(rs), maxLen = 3)
+    def frequent(folded: org.apache.spark.sql.DataFrame, minCount: Long) =
+      folded.as[(String, Int, Long)].collect()
+        .collect { case (p, l, s) if s >= minCount => p -> (l, s) }.toMap
+    val nAll = users(rows)
+    val minCount = (nAll + 1) / 2
+    val want = bruteForce(rows, 1L, 2L, 3)
+    assert(want.exists(_._2._1 >= 2), "fixture must surface a longer pattern")
+    // fold: every 5th user is new
+    val (oldRows, added) = rows.partition(_._1 % 5 != 0)
+    val nAdded = nAll - users(oldRows)
+    // foldTouched: every 6th user's events after the second arrive late
+    val late = rows.filter(r => r._1 % 6 == 0 && r._2 > 2)
+    val touched = late.map(_._1).toSet
+    val early = rows.filterNot(late.contains)
+    // eraseFold: every 4th user is erased
+    val (erased, kept) = rows.partition(_._1 % 4 == 0)
+    val minCountKept = (users(kept) + 1) / 2
+    // AQE would coalesce 7 tiny partitions back into one
+    val partitions = "spark.sql.shuffle.partitions"
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = Seq(partitions, coalesce).map(k => k -> spark.conf.get(k))
+    spark.conf.set(coalesce, "false")
+    try for (n <- Seq("1", "7")) {
+      spark.conf.set(partitions, n)
+      assert(mine(rows, 1L, 2L) == want, s"mine at $n partitions")
+      assert(frequent(SequentialPatterns.fold(
+          stored(oldRows, minCount - nAdded), df(added), "u", "t", "i", "y",
+          minCount, nAdded), minCount) == want, s"fold at $n partitions")
+      assert(frequent(SequentialPatterns.foldTouched(
+          stored(early, minCount - touched.size),
+          df(early.filter(r => touched(r._1))),
+          df(rows.filter(r => touched(r._1))), "u", "t", "i", "y",
+          minCount, touched.size.toLong), minCount) == want,
+        s"foldTouched at $n partitions")
+      assert(frequent(SequentialPatterns.eraseFold(
+          stored(rows, minCountKept), df(erased), "u", "t", "i", "y"),
+          minCountKept) == bruteForce(kept, 1L, 2L, 3),
+        s"eraseFold at $n partitions")
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("depth beyond the oracle cap: maxLen=4 matches brute force") {
